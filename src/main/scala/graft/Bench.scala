@@ -47,24 +47,14 @@ import org.apache.spark.sql.SparkSession
   *     Measured after the fix (same machine, full 214-query battery,
   *     one JVM): r6-common subset 58.3 s vs r6's 59.0 s (0.99×),
   *     q_dedup_lcs 3.2 s vs 29.6 s in BENCH_r07.
-  *  2. SHARDED EXECUTION (contingency, SPARK_GRAFT_BENCH_SHARDS=n) —
-  *     split the battery round-robin into n shards, each run in a
-  *     FRESH child JVM forked with the parent's exact JVM args and
-  *     classpath; each child warms itself (sf0.001 pass over its
-  *     shard + table counts at the target SF) and writes its shard's
-  *     name→[ms, gc_ms] map to a file the parent merges. Child stdout
-  *     goes to a log file so the parent's final JSON line stays the
-  *     last stdout. Default stays 1: hygiene already removed the
-  *     inflation, and a fork failure under the driver would report
-  *     healthy queries as -1 — strictly worse than the measured risk.
-  *  3. SELF-DIAGNOSING OUTPUT — bench_out.json records per query the
+  *  2. SELF-DIAGNOSING OUTPUT — bench_out.json records per query the
   *     median wall ms AND the GC ms observed during that median rep,
   *     so a future inflated artifact shows on its face whether the
   *     time went to GC (battery debt) or to the operator.
   *
-  * SPARK_GRAFT_BENCH_ONLY forces one JVM so diagnostic subsets stay
-  * comparable. The env var SPARK_GRAFT_BENCH_SHARD is the
-  * parent→child protocol ("i/n"), never set by hand.
+  * SPARK_GRAFT_BENCH_ONLY (comma-separated names) restricts the
+  * battery to a diagnostic subset; SPARK_GRAFT_BENCH_REPS sets the
+  * reps per query (default 3).
   *
   * ## Contention de-flake (round 12)
   *
@@ -140,8 +130,7 @@ object Bench {
     * the same file check_bench.py gates on. Absent file → no healing.
     */
   private def readBudgets(): Map[String, Double] = {
-    val p = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "tools/bench_budget.json"))
+    val p = java.nio.file.Paths.get("tools/bench_budget.json")
     if (!java.nio.file.Files.isReadable(p)) return Map.empty
     val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
     """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
@@ -184,102 +173,6 @@ object Bench {
     }
   }
 
-  /** Child-shard entry: time this shard's queries in THIS fresh JVM and
-    * write them to `outFile` as JSON {"name":[ms,gcMs,healed01],...}.
-    */
-  private def runShard(sfDir: String, names: Set[String], reps: Int,
-                       outFile: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, must precede session creation: the generated-class
-      // cache defaults to 100 entries — thrashing once a battery's
-      // codegen stages outgrow it (measured ~+0.1-0.15 s on every small
-      // query in round 6)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Warm the JVM before timing: codegen compilation, classloading, and
-    // the page cache dominate a fresh-JVM first pass. Run this shard's
-    // queries untimed at the smallest available SF (cheap — the data is
-    // 100x smaller), then count the tables at the target SF.
-    val warmDir = {
-      val p = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (p.isDirectory && p.getPath != sfDir) p.getPath else sfDir
-    }
-    if (warmDir != sfDir)
-      SparkEntry.queries.foreach { case (n, fn) =>
-        if (names.contains(n))
-          try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-    graft.sources.Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
-    val battery = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => names.contains(n) }
-    val results = healBreaches(spark, sfDir,
-      runBattery(spark, sfDir, battery, reps), reps)
-    val json = results.map { case (n, w, g, healed) =>
-      "\"" + n + "\":[" + w.map(t => math.round(t * 1000).toString).getOrElse("-1") +
-        "," + g + "," + (if (healed) 1 else 0) + "]"
-    }.mkString("{", ",", "}")
-    val w = new java.io.PrintWriter(outFile)
-    try w.println(json) finally w.close()
-    spark.stop()
-  }
-
-  /** Fork one child JVM per shard (sequentially — they each use every
-    * core) with the parent's exact JVM args + classpath; returns the
-    * merged name→(ms, gcMs) map. A shard that dies retries once, then
-    * its queries report -1.
-    */
-  private def runSharded(sfDir: String, allNames: Seq[String], nShards: Int,
-                         reps: Int): Map[String, (Long, Long, Boolean)] = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Boolean)]
-    (0 until nShards).foreach { i =>
-      val out = java.nio.file.Files.createTempFile(s"graft-bench-shard$i-", ".json")
-      val log = java.nio.file.Files.createTempFile(s"graft-bench-shard$i-", ".log")
-      def attempt(): Boolean = {
-        val pb = new ProcessBuilder(
-          (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench", sfDir)): _*)
-        pb.environment().put("SPARK_GRAFT_BENCH_SHARD", s"$i/$nShards")
-        pb.environment().put("SPARK_GRAFT_BENCH_SHARD_OUT", out.toString)
-        pb.environment().put("SPARK_GRAFT_BENCH_REPS", reps.toString)
-        pb.redirectErrorStream(true)
-        pb.redirectOutput(log.toFile)
-        val p = pb.start()
-        p.waitFor() == 0 && java.nio.file.Files.size(out) > 2
-      }
-      val ok = attempt() || attempt()
-      if (ok) {
-        val txt = new String(java.nio.file.Files.readAllBytes(out), "UTF-8").trim
-        // {"name":[ms,gc,healed],...} — names never contain quotes/commas
-        """"([^"]+)":\[(-?\d+),(-?\d+),([01])\]""".r.findAllMatchIn(txt).foreach { m =>
-          acc(m.group(1)) = (m.group(2).toLong, m.group(3).toLong, m.group(4) == "1")
-        }
-      }
-      java.nio.file.Files.deleteIfExists(out)
-    }
-    // shard membership is round-robin over the sorted names: stable as
-    // the battery grows, and it spreads name-adjacent heavy families
-    // (q_dedup_*) across JVMs instead of stacking one shard
-    allNames.map(n => n -> acc.getOrElse(n, (-1L, -1L, false))).toMap
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -287,41 +180,34 @@ object Bench {
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(3)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).toSet).filter(_.nonEmpty)
-    val allNames = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val battery = SparkEntry.queries.toSeq
+      .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    // child-shard mode: run the slice, write the file, exit
-    sys.env.get("SPARK_GRAFT_BENCH_SHARD") match {
-      case Some(spec) =>
-        val Array(i, n) = spec.split('/').map(_.toInt)
-        val mine = allNames.zipWithIndex.collect {
-          case (name, idx) if idx % n == i => name
-        }.toSet
-        runShard(sfDir, mine, reps, sys.env("SPARK_GRAFT_BENCH_SHARD_OUT"))
-        return
-      case None => ()
+    val spark = GraftSession.local("ERROR")
+    // Warm the JVM before timing: codegen compilation, classloading, and
+    // the page cache dominate a fresh-JVM first pass. Run the battery
+    // untimed at the smallest available SF (cheap — the data is 100x
+    // smaller), then count the tables at the target SF.
+    val warmDir = {
+      val p = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+      if (p.isDirectory && p.getPath != sfDir) p.getPath else sfDir
     }
+    if (warmDir != sfDir)
+      battery.foreach { case (_, fn) =>
+        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      }
+    graft.sources.Tables.all.foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    }
+    // (name, (median ms or -1, gc ms, healed)), sorted by name
+    val ordered = healBreaches(spark, sfDir,
+      runBattery(spark, sfDir, battery, reps), reps)
+      .map { case (n, w, g, healed) =>
+        (n, (w.map(t => math.round(t * 1000)).getOrElse(-1L), g, healed))
+      }.sortBy(_._1)
+    spark.stop()
 
-    val nShards = sys.env.get("SPARK_GRAFT_BENCH_SHARDS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
-      .map(n => if (only.isDefined) 1 else n)
-      .getOrElse(1)
-
-    val merged: Map[String, (Long, Long, Boolean)] =
-      if (nShards <= 1) {
-        // in-process path (diagnostic subsets, explicit override)
-        val out = java.nio.file.Files.createTempFile("graft-bench-single-", ".json")
-        val mine = allNames.toSet
-        runShard(sfDir, mine, reps, out.toString)
-        val txt = new String(java.nio.file.Files.readAllBytes(out), "UTF-8").trim
-        java.nio.file.Files.deleteIfExists(out)
-        val m = """"([^"]+)":\[(-?\d+),(-?\d+),([01])\]""".r.findAllMatchIn(txt).map { mm =>
-          mm.group(1) -> (mm.group(2).toLong, mm.group(3).toLong, mm.group(4) == "1")
-        }.toMap
-        allNames.map(n => n -> m.getOrElse(n, (-1L, -1L, false))).toMap
-      } else runSharded(sfDir, allNames, nShards, reps)
-
-    val ordered = allNames.map(n => (n, merged(n)))
     val qv = ordered.map { case (_, (ms, _, _)) => ms.toString }.mkString("[", ",", "]")
     val total = ms3(ordered.map(_._2._1).filter(_ >= 0).sum / 1000.0)
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
@@ -344,7 +230,7 @@ object Bench {
         .mkString("[", ",", "]")
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(
-        s"""{"metric":"total","value":$total,"unit":"sec","shards":$nShards,"queries":$fullQs,"gc_ms":$gcQs,"healed":$healedQs,"sf":$sfNum}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"healed":$healedQs,"sf":$sfNum}""")
       finally w.close()
     } catch { case _: Throwable => () }
     println(line)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the round-9 empirical scaling check (SURVEY
@@ -39,14 +39,7 @@ object GenScale {
     val src = args(0)
     val dst = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("ERROR")
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit = {

@@ -33,4 +33,19 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Core count for the local harness mains: `SPARK_GRAFT_CPUS` if set,
+    * else min(32, nproc).
+    */
+  private def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+
+  /** The harness mains' session: `local[cpus]` with `cpus` shuffle
+    * partitions and the caller's log level.
+    */
+  def local(logLevel: String, cpus: Int = localCpus): SparkSession = {
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
 }

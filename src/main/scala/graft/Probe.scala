@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch timing harness for local iteration (not part of the driver
   * contract): times one named query N times at a given SF dir and
   * prints per-run wall-clock so a hot spot can be bisected.
@@ -11,16 +9,7 @@ object Probe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("ERROR")
     val names = name.split(',').map(_.trim).filter(_.nonEmpty)
     // per-job accounting: where does a multi-action query spend its
     // wall-clock? (job id, ms, #tasks, input records)

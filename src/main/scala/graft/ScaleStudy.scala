@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** §8 scaling-study harness for the dedup tail (local iteration tool,
   * not part of the driver contract): prints the winnowing candidate
   * statistics of the PRODUCTION (xxhash64) pipeline plus wall times for
@@ -16,16 +14,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleStudy {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("ERROR")
     // optional second arg: comma-separated query names to time instead
     // of the default dedup-tail pair (candidate stats print only for
     // the default run — they belong to the winnowing study)

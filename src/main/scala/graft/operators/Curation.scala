@@ -1524,7 +1524,6 @@ object Curation {
     */
   def contaminationEmbedding(spark: SparkSession, dir: String,
                              minScore: Double = 0.35): DataFrame = {
-    graft.plans.CosineSim.register(spark)
     val e = Tables.embeddings(spark, dir)
     val bench = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("bench_id"), col("embedding").as("b_emb"))

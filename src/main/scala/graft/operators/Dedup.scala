@@ -545,7 +545,6 @@ object Dedup {
     * candidate generator and this stays the verify kernel.
     */
   def embeddingPairs(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
-    CosineSim.register(spark)
     val e = Tables.embeddings(spark, dir)
     // stream side of the all-pairs kernel: O(n²) cosines must run at
     // compute parallelism, not the scan's file-split count
@@ -1676,7 +1675,6 @@ object Dedup {
     */
   def semanticDedup(spark: SparkSession, dir: String, nCells: Int = -1,
                     tau: Double = 0.4): DataFrame = {
-    CosineSim.register(spark)
     val nc =
       if (nCells > 0) nCells
       else Similarity.autoCells(Similarity.corpusN(spark, dir))
@@ -1696,7 +1694,6 @@ object Dedup {
     */
   def semanticDedupIndexed(spark: SparkSession, dir: String,
                            tau: Double = 0.4): DataFrame = {
-    CosineSim.register(spark)
     val path = Similarity.ensureIvfIndex(spark, dir)
     val corpusCells = spark.read.parquet(s"$path/cells")
     val centroids = spark.read.parquet(s"$path/centroids")

@@ -161,7 +161,6 @@ object GraphAnn {
     * insert cost); probes only ever widen. Probe-visible immediately.
     */
   def appendToGraph(spark: SparkSession, path: String, newVecs: DataFrame): Unit = {
-    CosineSim.register(spark)
     val centroids = spark.read.parquet(s"$path/centroids")
     val assigned = overlappedCells(newVecs, centroids).localCheckpoint()
     val members = spark.read.parquet(s"$path/cells")
@@ -315,7 +314,6 @@ object GraphAnn {
     */
   def annGraphAt(spark: SparkSession, dir: String, path: String,
                  ef: Int = beam, nHops: Int = hops): DataFrame = {
-    CosineSim.register(spark)
     val edges = spark.read.parquet(s"$path/edges")
     val centroids = spark.read.parquet(s"$path/centroids")
     val cells = spark.read.parquet(s"$path/cells")

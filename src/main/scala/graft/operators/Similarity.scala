@@ -79,7 +79,6 @@ object Similarity {
        |""".stripMargin
 
   private[operators] def queryCorpus(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    CosineSim.register(spark)
     val e = Tables.embeddings(spark, dir)
     // corpus stays at scan parallelism: the scoring kernel is a few
     // cosines per row here, and the IVF k-means fit pays per-task
@@ -416,7 +415,6 @@ object Similarity {
       .collect().map(_.getInt(0)).toSeq
     val corpusCells = spark.read.parquet(s"$indexPath/cells")
       .filter(col("cell").isin(cells: _*))
-    CosineSim.register(spark)
     rankTopK(
       probes.join(corpusCells, "cell")
         .withColumn("cos_sim", round(CosineSim(col("q_emb"), col("n_emb")), 6)))
@@ -624,7 +622,6 @@ object Similarity {
     */
   def appendToIvfIndex(spark: SparkSession, indexPath: String,
                        newVectors: DataFrame): Unit = {
-    CosineSim.register(spark)
     val centroids = spark.read.parquet(s"$indexPath/centroids")
     val w = Window.partitionBy(col("n_id")).orderBy(col("c_sim").desc, col("cell"))
     newVectors.select(col("n_id"), col("n_emb"))
@@ -690,7 +687,6 @@ object Similarity {
     * filter and the search runs on what survives.
     */
   def annFiltered(spark: SparkSession, dir: String, label: Int = 1): DataFrame = {
-    CosineSim.register(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1240,7 +1236,6 @@ object Similarity {
     */
   def hardNegatives(spark: SparkSession, dir: String,
                     negK: Int = 3): DataFrame = {
-    CosineSim.register(spark)
     val e = Tables.embeddings(spark, dir)
     val anchors = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -1876,7 +1871,6 @@ object Similarity {
     */
   def knnLabel(spark: SparkSession, dir: String,
                batchN: Int = 25, k: Int = 5): DataFrame = {
-    CosineSim.register(spark)
     val e = Tables.embeddings(spark, dir)
     val batch = e.filter(col("vec_id") < batchN)
       .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: cosine similarity of two float vectors
@@ -70,18 +69,10 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  /** Register `cosine_sim` in the session function registry (F2) so it is
-    * callable from SQL and via call_function. Idempotent.
+  /** Column-level API; SQL reaches the same expression as `cosine_sim`
+    * through GraftExtensions.
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // skip when present: createOrReplace on an existing entry logs a
-    // "replaced a previously registered function" WARN on every call site
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      reg.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Column-level API — requires register(spark) first. */
-  def apply(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
+  def apply(a: Column, b: Column): Column =
+    GraftColumnBridge.toColumn(CosineSim(GraftColumnBridge.toExpression(a),
+      GraftColumnBridge.toExpression(b)))
 }

@@ -21,14 +21,6 @@ object Scratch {
 
   val confKey = "spark.graft.scratch.dir"
 
-  /** Total fresh artifact builds this JVM (misses of the `ensure`
-    * memo). The bench snapshots it around each timed rep so
-    * bench_out.json can attribute index/park build cost to the query
-    * that paid it — without this column a warm-scratch run and a
-    * cold-scratch run are indistinguishable on their face.
-    */
-  val buildCount = new java.util.concurrent.atomic.AtomicLong(0)
-
   private val warned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   def root(spark: SparkSession): String =
@@ -86,7 +78,6 @@ object Scratch {
       }
       build(dir)
       fs.create(marker, true).close()
-      buildCount.incrementAndGet()
     }
     dir
   }

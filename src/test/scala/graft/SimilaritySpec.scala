@@ -11,7 +11,6 @@ class SimilaritySpec extends AnyFunSuite {
   import spark.implicits._
 
   test("CosineSim computes the exact cosine (eval + codegen paths)") {
-    CosineSim.register(spark)
     val df = Seq(
       (Array(1.0f, 0.0f, 0.0f), Array(1.0f, 0.0f, 0.0f)),   // identical → 1
       (Array(1.0f, 0.0f, 0.0f), Array(0.0f, 1.0f, 0.0f)),   // orthogonal → 0
@@ -21,7 +20,7 @@ class SimilaritySpec extends AnyFunSuite {
     val got = df.select(CosineSim(col("a"), col("b"))).as[Double].collect()
     val want = Seq(1.0, 0.0, math.sqrt(2) / 2, 0.0)
     got.zip(want).foreach { case (g, w) => assert(math.abs(g - w) < 1e-9) }
-    // SQL registration path
+    // SQL path: cosine_sim resolves through GraftExtensions
     df.createOrReplaceTempView("vecs")
     val viaSql = spark.sql("SELECT cosine_sim(a, b) FROM vecs").as[Double].collect()
     got.zip(viaSql).foreach { case (g, s) => assert(g == s) }
