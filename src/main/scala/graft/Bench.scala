@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   * the line is printed after all work so no log output follows it.
   *
   * A query whose every rep throws reports -1 (ms) and contributes 0 to
-  * the total — a broken query must look broken, not fast.
+  * the total — a broken query must look broken, not fast — and
+  * `bench_out.json`'s `errors` map carries its last exception.
   *
   * ## Battery-interaction control (round 8)
   *
@@ -89,17 +90,36 @@ object Bench {
     System.gc()
   }
 
-  private def timeOnce(spark: SparkSession, sfDir: String, name: String,
-                       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Long)] = {
+  private def timeOnce(spark: SparkSession, sfDir: String,
+                       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[Throwable, (Double, Long)] = {
     val g0 = gcMs()
     val t0 = System.nanoTime()
     try {
       fn(spark, sfDir).count()
-      Some(((System.nanoTime() - t0) / 1e9, gcMs() - g0))
-    } catch { case _: Throwable => None }
+      Right(((System.nanoTime() - t0) / 1e9, gcMs() - g0))
+    } catch { case t: Throwable => Left(t) }
   }
 
-  /** (name, median-wall-seconds or None, gc-ms during the median rep).
+  /** Median rep (wall seconds, gc ms) of `reps` timings, or the last
+    * rep's exception (`Throwable.toString`) when every rep threw.
+    */
+  private def measure(spark: SparkSession, sfDir: String,
+                      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+                      reps: Int): Either[String, (Double, Long)] = {
+    val runs = (1 to reps).map(_ => timeOnce(spark, sfDir, fn))
+    val times = runs.collect { case Right(t) => t }.sortBy(_._1)
+    if (times.nonEmpty) Right(times(times.length / 2))
+    else Left(runs.collect { case Left(e) => e.toString }.last)
+  }
+
+  /** One query's result: median wall seconds (None when every rep
+    * threw, the cause then in `error`), gc ms during the median rep, and
+    * whether the median was re-measured (see `healBreaches`).
+    */
+  private case class Result(name: String, wall: Option[Double], gc: Long,
+                            healed: Boolean = false, error: Option[String] = None)
+
+  /** One `Result` per query.
     *
     * Execution order is the md5 of the query name, NOT alphabetical
     * (round 12): three driver batteries in a row showed the same false-
@@ -112,17 +132,15 @@ object Bench {
     */
   private def runBattery(spark: SparkSession, sfDir: String,
                          battery: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-                         reps: Int): Seq[(String, Option[Double], Long)] =
+                         reps: Int): Seq[Result] =
     battery.sortBy { case (name, _) =>
       java.security.MessageDigest.getInstance("MD5")
         .digest(name.getBytes("UTF-8")).map("%02x".format(_)).mkString
     }.map { case (name, fn) =>
       hygiene(spark)
-      val times = (1 to reps).flatMap(_ => timeOnce(spark, sfDir, name, fn)).sortBy(_._1)
-      if (times.isEmpty) (name, None, -1L)
-      else {
-        val (w, g) = times(times.length / 2)
-        (name, Some(w), g)
+      measure(spark, sfDir, fn, reps) match {
+        case Right((w, g)) => Result(name, Some(w), g)
+        case Left(err) => Result(name, None, -1L, error = Some(err))
       }
     }
 
@@ -151,27 +169,33 @@ object Bench {
     * ratcheting budgets toward the lucky side.
     */
   private def healBreaches(spark: SparkSession, sfDir: String,
-                           results: Seq[(String, Option[Double], Long)],
-                           reps: Int): Seq[(String, Option[Double], Long, Boolean)] = {
+                           results: Seq[Result], reps: Int): Seq[Result] = {
     val budgets = readBudgets()
-    if (budgets.isEmpty) return results.map { case (n, w, g) => (n, w, g, false) }
     results.map {
-      case (name, Some(w), g)
+      case r @ Result(name, Some(w), _, _, _)
         if budgets.get(name).exists(b => w > 1.5 * math.max(b, 0.15)) =>
         hygiene(spark)
-        val retimes = (1 to reps).flatMap(_ =>
-          timeOnce(spark, sfDir, name, SparkEntry.queries(name))).sortBy(_._1)
-        // every retime failed: the published median was never actually
-        // re-measured, so it must NOT carry the healed flag (the flag's
-        // contract is "this number is a min-of-two-medians")
-        if (retimes.isEmpty) (name, Some(w), g, false)
-        else {
-          val (w2, g2) = retimes(retimes.length / 2)
-          if (w2 < w) (name, Some(w2), g2, true) else (name, Some(w), g, true)
+        measure(spark, sfDir, SparkEntry.queries(name), reps) match {
+          // every retime failed: the published median was never actually
+          // re-measured, so it must NOT carry the healed flag (the flag's
+          // contract is "this number is a min-of-two-medians")
+          case Left(_) => r
+          case Right((w2, g2)) =>
+            if (w2 < w) r.copy(wall = Some(w2), gc = g2, healed = true) else r.copy(healed = true)
         }
-      case (n, w, g) => (n, w, g, false)
+      case r => r
     }
   }
+
+  /** JSON string literal: quotes, backslashes and control characters
+    * escaped (exception messages span lines).
+    */
+  private def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
@@ -187,7 +211,8 @@ object Bench {
     // Warm the JVM before timing: codegen compilation, classloading, and
     // the page cache dominate a fresh-JVM first pass. Run the battery
     // untimed at the smallest available SF (cheap — the data is 100x
-    // smaller), then count the tables at the target SF.
+    // smaller), then count the tables at the target SF through the
+    // loader the queries use.
     val warmDir = {
       val p = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
       if (p.isDirectory && p.getPath != sfDir) p.getPath else sfDir
@@ -197,19 +222,16 @@ object Bench {
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
     graft.sources.Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try graft.sources.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    // (name, (median ms or -1, gc ms, healed)), sorted by name
     val ordered = healBreaches(spark, sfDir,
-      runBattery(spark, sfDir, battery, reps), reps)
-      .map { case (n, w, g, healed) =>
-        (n, (w.map(t => math.round(t * 1000)).getOrElse(-1L), g, healed))
-      }.sortBy(_._1)
+      runBattery(spark, sfDir, battery, reps), reps).sortBy(_.name)
     spark.stop()
+    def ms(r: Result): Long = r.wall.map(t => math.round(t * 1000)).getOrElse(-1L)
 
-    val qv = ordered.map { case (_, (ms, _, _)) => ms.toString }.mkString("[", ",", "]")
-    val total = ms3(ordered.map(_._2._1).filter(_ >= 0).sum / 1000.0)
+    val qv = ordered.map(ms).mkString("[", ",", "]")
+    val total = ms3(ordered.map(ms).filter(_ >= 0).sum / 1000.0)
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","nq":${ordered.length},"qv":$qv,"sf":$sfNum}"""
@@ -217,20 +239,20 @@ object Bench {
     // plus the per-query GC ms of the median rep (the self-diagnosis
     // column: wall ≫ gc → the operator; wall ≈ gc → battery debt).
     try {
-      val fullQs = ordered.map { case (name, (ms, _, _)) =>
-        "\"" + name + "\":" + (if (ms < 0) "-1" else ms3(ms / 1000.0).toString)
+      val fullQs = ordered.map { r =>
+        "\"" + r.name + "\":" + (if (ms(r) < 0) "-1" else ms3(ms(r) / 1000.0).toString)
       }.mkString("{", ",", "}")
-      val gcQs = ordered.map { case (name, (_, g, _)) =>
-        "\"" + name + "\":" + g
-      }.mkString("{", ",", "}")
+      val gcQs = ordered.map(r => "\"" + r.name + "\":" + r.gc).mkString("{", ",", "}")
       // healed = queries whose published median is min-of-two (budget
       // breach re-measured post-battery); lets check_bench --update
       // prefer clean medians when re-baselining
-      val healedQs = ordered.collect { case (name, (_, _, true)) => "\"" + name + "\"" }
-        .mkString("[", ",", "]")
+      val healedQs = ordered.filter(_.healed).map("\"" + _.name + "\"").mkString("[", ",", "]")
+      // errors = the last rep's exception of every query reporting -1
+      val errorQs = ordered.flatMap(r => r.error.map(e => "\"" + r.name + "\":" + jsonStr(e)))
+        .mkString("{", ",", "}")
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"healed":$healedQs,"sf":$sfNum}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"healed":$healedQs,"errors":$errorQs,"sf":$sfNum}""")
       finally w.close()
     } catch { case _: Throwable => () }
     println(line)

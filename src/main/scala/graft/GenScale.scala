@@ -41,10 +41,10 @@ object GenScale {
     val replicas = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.local("ERROR")
 
-    def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def tbl(name: String): DataFrame = graft.sources.Tables.load(spark, src, name)
     def write(df: DataFrame, name: String): Unit = {
       df.write.mode("overwrite").parquet(s"$dst/$name.parquet")
-      println(s"[gen] $name: ${spark.read.parquet(s"$dst/$name.parquet").count()} rows")
+      println(s"[gen] $name: ${graft.sources.Tables.load(spark, dst, name).count()} rows")
     }
     /** Union of per-replica transforms; replica 0 passes through. */
     def replicate(df: DataFrame)(per: (DataFrame, Int) => DataFrame): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** E10c — BPE merge-table TRAINING (SURVEY §2). Public algorithm:
   * Sennrich et al. 2016, "Neural Machine Translation of Rare Words with
@@ -114,7 +114,7 @@ object BpeTrain {
       learnMergesDf(Tables.documents(spark, dir), k)
         .coalesce(1).write.mode("overwrite").parquet(s"$p/merges")
     }
-    spark.read.parquet(s"$path/merges").orderBy(col("rank"))
+    Parquet.read(spark, s"$path/merges").orderBy(col("rank"))
   }
 
   /** The identical training recurrence, rounds unrolled as chained

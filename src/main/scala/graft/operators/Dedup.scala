@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.HashFns
 import graft.plans.CosineSim
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** Deduplication suite for training-data pipelines (SURVEY §2 E1–E5).
   *
@@ -51,7 +51,7 @@ object Dedup {
       val p = new org.apache.hadoop.fs.Path(prev)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
   }
 
   /** Fingerprint-memoized park — the `ensureIvfIndex` contract for
@@ -67,7 +67,7 @@ object Dedup {
     */
   private def ensurePark(spark: SparkSession, family: String, gen: String)
                         (build: => DataFrame): DataFrame =
-    spark.read.parquet(
+    Parquet.read(spark,
       graft.sources.Scratch.ensure(spark, family, gen)(p =>
         build.write.mode("overwrite").parquet(p)))
 
@@ -658,7 +658,7 @@ object Dedup {
 
   /** The memoized mapping as a frame (build on first call per dir). */
   def canonicalMapping(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${ensureCanonical(spark, dir)}/map")
+    Parquet.read(spark, s"${ensureCanonical(spark, dir)}/map")
 
   /** E43 — QUALITY-AWARE canonical member election (SlimPajama-style
     * "keep the longest copy": min-id election biases the kept corpus
@@ -1695,8 +1695,8 @@ object Dedup {
   def semanticDedupIndexed(spark: SparkSession, dir: String,
                            tau: Double = 0.4): DataFrame = {
     val path = Similarity.ensureIvfIndex(spark, dir)
-    val corpusCells = spark.read.parquet(s"$path/cells")
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val corpusCells = Parquet.read(spark, s"$path/cells")
+    val centroids = Parquet.read(spark, s"$path/centroids")
     val cells = corpusCells.join(broadcast(centroids), "cell")
       .withColumn("c_sim", round(CosineSim(col("n_emb"), col("centroid")), 6))
       .select(col("cell"), col("n_id"), col("n_emb"), col("c_sim"))

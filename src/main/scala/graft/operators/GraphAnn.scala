@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.CosineSim
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** E7e — graph ANN via NN-descent (SURVEY §2).
   *
@@ -161,9 +161,9 @@ object GraphAnn {
     * insert cost); probes only ever widen. Probe-visible immediately.
     */
   def appendToGraph(spark: SparkSession, path: String, newVecs: DataFrame): Unit = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = Parquet.read(spark, s"$path/centroids")
     val assigned = overlappedCells(newVecs, centroids).localCheckpoint()
-    val members = spark.read.parquet(s"$path/cells")
+    val members = Parquet.read(spark, s"$path/cells")
       .withColumnRenamed("n_id", "dst").withColumnRenamed("n_emb", "dst_emb")
     val scored = assigned
       .select(col("n_id").as("src"), col("n_emb").as("src_emb"), col("cell"))
@@ -314,9 +314,9 @@ object GraphAnn {
     */
   def annGraphAt(spark: SparkSession, dir: String, path: String,
                  ef: Int = beam, nHops: Int = hops): DataFrame = {
-    val edges = spark.read.parquet(s"$path/edges")
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val cells = spark.read.parquet(s"$path/cells")
+    val edges = Parquet.read(spark, s"$path/edges")
+    val centroids = Parquet.read(spark, s"$path/centroids")
+    val cells = Parquet.read(spark, s"$path/cells")
     val (q, _) = Similarity.queryCorpus(spark, dir)
 
     def topPerQuery(scored: DataFrame, k: Int): DataFrame = {

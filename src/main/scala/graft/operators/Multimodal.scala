@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{AudioCodec, ImageCodec}
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** Multimodal (binary) column plumbing (SURVEY §2 E12).
   *
@@ -575,7 +575,7 @@ object Multimodal {
   def features(spark: SparkSession, dir: String): DataFrame =
     extractFeatures(spark,
         Tables.atComputeParallelism(
-          spark.read.parquet(ensureMediaTable(spark, dir))))
+          Parquet.read(spark, ensureMediaTable(spark, dir))))
       .select(col("doc_id"), col("kind"), col("n_bytes"), col("checksum"),
         round(col("feat_norm"), 4).as("feat_norm"))
       .orderBy(col("doc_id"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.plans.CosineSim
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** Similarity search over embedding columns (SURVEY §2 E6/E7).
   *
@@ -401,7 +401,7 @@ object Similarity {
   def probeIvfIndex(spark: SparkSession, dir: String, indexPath: String,
                     nProbe: Int = -1): DataFrame = {
     val (q, _) = queryCorpus(spark, dir)
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
+    val centroids = Parquet.read(spark, s"$indexPath/centroids")
     // auto nProbe derives from the index ACTUALLY STORED at indexPath
     // (its centroid count), not from the corpus schedule — an index
     // built with an explicit nCells is probed at the same ~37.5%
@@ -413,7 +413,7 @@ object Similarity {
     val probes = probeCells(q, centroids, np)
     val cells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val corpusCells = spark.read.parquet(s"$indexPath/cells")
+    val corpusCells = Parquet.read(spark, s"$indexPath/cells")
       .filter(col("cell").isin(cells: _*))
     rankTopK(
       probes.join(corpusCells, "cell")
@@ -436,7 +436,7 @@ object Similarity {
   def clusterBalancedSample(spark: SparkSession, dir: String,
                             quota: Int = 24): DataFrame = {
     val path = ensureIvfIndex(spark, dir)
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = Parquet.read(spark, s"$path/cells")
       .select(col("n_id"), col("cell"))
     val w = Window.partitionBy(col("cell"))
       .orderBy(md5(col("n_id").cast("string")), col("n_id"))
@@ -461,7 +461,7 @@ object Similarity {
     */
   def cellAudit(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureIvfIndex(spark, dir)
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = Parquet.read(spark, s"$path/cells")
       .select(col("n_id"), col("cell"))
     val labels = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("n_id"), col("label"))
@@ -622,7 +622,7 @@ object Similarity {
     */
   def appendToIvfIndex(spark: SparkSession, indexPath: String,
                        newVectors: DataFrame): Unit = {
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
+    val centroids = Parquet.read(spark, s"$indexPath/centroids")
     val w = Window.partitionBy(col("n_id")).orderBy(col("c_sim").desc, col("cell"))
     newVectors.select(col("n_id"), col("n_emb"))
       .join(broadcast(centroids))
@@ -640,7 +640,7 @@ object Similarity {
     * centroid table is rewritten in place.
     */
   def recenterIvfIndex(spark: SparkSession, indexPath: String): Unit = {
-    val cells = spark.read.parquet(s"$indexPath/cells")
+    val cells = Parquet.read(spark, s"$indexPath/cells")
     val next = cells
       .select(col("cell"), posexplode(col("n_emb")).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
@@ -1422,8 +1422,8 @@ object Similarity {
                               m: Int, ks: Int, iters: Int,
                               trainSample: Int): (DataFrame, DataFrame) = {
     val path = ensurePqIndex(spark, dir, m, ks, iters, trainSample)
-    val codes = spark.read.parquet(s"$path/codes")
-    val books = spark.read.parquet(s"$path/books")
+    val codes = Parquet.read(spark, s"$path/codes")
+    val books = Parquet.read(spark, s"$path/books")
     (codes, pqLut(q, books, m))
   }
 
@@ -1532,8 +1532,8 @@ object Similarity {
     // shape builds once and probes many times, so the query measures
     // probe latency, not a fresh k-means fit per run
     val indexPath = ensureIvfIndex(spark, dir, nc)
-    val corpusCells = spark.read.parquet(s"$indexPath/cells")
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
+    val corpusCells = Parquet.read(spark, s"$indexPath/cells")
+    val centroids = Parquet.read(spark, s"$indexPath/centroids")
     val (codes, lut) = pqPartsMemoized(spark, dir, q, m, ks, iters, trainSample)
     val candPairs = probeCells(q, centroids, np)
       .select(col("q_id"), col("cell"))

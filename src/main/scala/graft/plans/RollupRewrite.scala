@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.LongType
 
+import graft.sources.Parquet
+
 /** F8 — rollup-aware aggregate rewrite (SURVEY §2): the
   * materialized-view rewrite real rollup engines perform. When a
   * session points `spark.graft.rollup.root` at an A14 summary store,
@@ -117,7 +119,7 @@ case class RollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
   }
 
   private def rewrite(agg: Aggregate, root: String): Option[LogicalPlan] = {
-    val summary = session.read.parquet(root).queryExecution.analyzed
+    val summary = Parquet.read(session, root).queryExecution.analyzed
     def attr(n: String): Option[AttributeReference] =
       summary.output.collectFirst {
         case a: AttributeReference if a.name == n => a

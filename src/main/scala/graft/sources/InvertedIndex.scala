@@ -76,7 +76,7 @@ object InvertedIndex {
     * against the sorted layout.
     */
   def postings(spark: SparkSession, indexPath: String, term: String): DataFrame =
-    spark.read.parquet(indexPath)
+    Parquet.read(spark, indexPath)
       .filter(col("tb") === bucketOf(term) && col("token") === term)
 
   /** Index location for a data dir (content under [[Scratch]] —
@@ -315,7 +315,7 @@ object InvertedIndex {
   def suggestPrefix(spark: SparkSession, dir: String,
                     prefix: String = "s", k: Int = 5): DataFrame = {
     val path = ensureIndex(spark, dir)
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .filter(col("token").startsWith(prefix))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))
@@ -373,7 +373,7 @@ object InvertedIndex {
   def searchSuffix(spark: SparkSession, dir: String,
                    suffix: String = "dow"): DataFrame = {
     val path = ensureReverseIndex(spark, dir)
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .filter(col("token_rev").startsWith(suffix.reverse))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))
@@ -403,7 +403,7 @@ object InvertedIndex {
                          t1: String = "hash", prefix: String = "jo"): DataFrame = {
     val path = ensureIndex(spark, dir)
     val p1 = postings(spark, path, t1).select(col("doc_id"), col("positions").as("p1"))
-    val p2 = spark.read.parquet(path)
+    val p2 = Parquet.read(spark, path)
       .filter(col("token").startsWith(prefix))
       .select(col("doc_id"), col("token").as("completion"), col("positions").as("p2"))
     p1.join(p2, "doc_id")
@@ -439,7 +439,7 @@ object InvertedIndex {
   def suggestFuzzy(spark: SparkSession, dir: String,
                    term: String = "jion", maxDist: Int = 2, k: Int = 5): DataFrame = {
     val path = ensureIndex(spark, dir)
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .filter(abs(length(col("token")) - term.length) <= maxDist &&
         col("token") =!= term &&
         levenshtein(col("token"), lit(term)) <= maxDist)
@@ -484,7 +484,7 @@ object InvertedIndex {
                     maxDist: Int = 2, k: Int = 3,
                     maxCandidates: Int = 10000): DataFrame = {
     val path = ensureIndex(spark, dir)
-    val idx = spark.read.parquet(path)
+    val idx = Parquet.read(spark, path)
     // The collect is bounded by the edit-distance neighborhood of one
     // word in the terms dictionary — dozens of rows in practice. The
     // explicit cap (mirror of Dedup.smallGraphMaxEdges) turns a

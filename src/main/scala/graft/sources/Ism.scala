@@ -87,7 +87,7 @@ object Ism {
           // scoped to one date): the live partition stays readable
           // until the atomic rename
           val tmp = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + s".ism-tmp/$name")
-          spark.read.parquet(st.getPath.toString)
+          Parquet.read(spark, st.getPath.toString)
             .repartition(1, col("source"))
             .write.mode("overwrite").partitionBy("source")
             .parquet(tmp.toString)

@@ -54,23 +54,29 @@ object LogStore {
       .partitionBy("log_date", "source")
       .parquet(root)
 
-  /** Read back with partition pruning: only the directories inside the
-    * date range (and source, if given) are listed and scanned.
+  /** Read back with partition pruning. The whole root is listed when
+    * the frame is built; the date range (and source, if given) become
+    * partition filters, so only files under matching `log_date=` /
+    * `source=` directories are picked for the scan.
     *
     * `mergeSchema` handles schema evolution: log formats grow fields
     * over time (a new agent version emits an extra column), and a
     * union-schema read surfaces old days with nulls instead of failing
     * — the OpenSearch dynamic-mapping behavior, opt-in because schema
-    * merging lists every file's footer (costly at 100 TB; default
-    * reads use the latest-write schema).
+    * merging reads every file's footer in a Spark job (costly at
+    * 100 TB). Default reads take the schema from ONE footer, read on
+    * the driver by `Parquet.read`: the first data file in path-string
+    * order (under the string-least `epoch=` / `log_date=` directory),
+    * so a column that file lacks is absent from a default read.
     */
   def read(spark: SparkSession, root: String,
            fromDate: String, untilDate: String,
            source: Option[String] = None,
            mergeSchema: Boolean = false): DataFrame = {
-    val base = spark.read
-      .option("mergeSchema", mergeSchema.toString)
-      .parquet(root)
+    val all =
+      if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(root)
+      else Parquet.read(spark, root)
+    val base = all
       .filter(col("log_date") >= lit(fromDate) && col("log_date") < lit(untilDate))
     source.fold(base)(s => base.filter(col("source") === s))
   }
@@ -280,7 +286,7 @@ object LogStore {
     // the scan once, not twice)
     if (foldEpochs(spark, root, filesPerPartition)) return
     val tmp = root.stripSuffix("/") + ".compact-tmp"
-    spark.read.parquet(root)
+    Parquet.read(spark, root)
       .repartition(filesPerPartition, col("log_date"), col("source"))
       .write.mode("overwrite")
       .partitionBy("log_date", "source")
@@ -324,7 +330,7 @@ object LogStore {
     // silently drop the epoch scheme mid-store otherwise (same
     // discipline as compact)
     foldEpochs(spark, root, filesPerPartition)
-    val df = spark.read.parquet(root)
+    val df = Parquet.read(spark, root)
     val (a, b) = (col(zCols._1).cast("double"), col(zCols._2).cast("double"))
     val st = df.agg(min(a).as("a0"), max(a).as("a1"),
       min(b).as("b0"), max(b).as("b1")).collect().head
@@ -368,7 +374,7 @@ object LogStore {
     */
   def fileSpans(spark: SparkSession, root: String,
                 c1: String, c2: String): DataFrame =
-    spark.read.parquet(root)
+    Parquet.read(spark, root)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(c1)).as("min1"), max(col(c1)).as("max1"),
         min(col(c2)).as("min2"), max(col(c2)).as("max2"),
@@ -430,7 +436,7 @@ object LogStore {
       case ids   => Some(ids.max)
     }
     val tmp = root.stripSuffix("/") + ".fold-tmp"
-    spark.read.parquet(root).drop("epoch")
+    Parquet.read(spark, root).drop("epoch")
       .repartition(filesPerPartition, col("log_date"), col("source"))
       .write.mode("overwrite")
       .partitionBy("log_date", "source")
@@ -514,7 +520,7 @@ object LogStore {
     */
   def reindex(spark: SparkSession, srcRoot: String, dstRoot: String)
              (transform: DataFrame => DataFrame): Unit = {
-    val out = transform(spark.read.parquet(srcRoot))
+    val out = transform(Parquet.read(spark, srcRoot))
     require(Seq("log_date", "source").forall(out.columns.contains),
       "reindex transform must preserve the log_date/source partition keys")
     out.write.mode("overwrite")
@@ -557,7 +563,7 @@ object LogStore {
   def deleteByQuery(spark: SparkSession, root: String,
                     predicate: org.apache.spark.sql.Column): Long = {
     recoverParkedPartitions(spark, root)
-    val all = spark.read.parquet(root)
+    val all = Parquet.read(spark, root)
     // Normalize once: under three-valued logic a NULL-valued predicate is
     // neither `p` nor `!p`, so filtering keep-rows with `!predicate` would
     // silently drop them. `_delete_by_query` semantics: NULL = no match.
@@ -664,7 +670,7 @@ object LogStore {
                     predicate: org.apache.spark.sql.Column)
                    (transform: DataFrame => DataFrame): Long = {
     recoverParkedPartitions(spark, root)
-    val all = spark.read.parquet(root)
+    val all = Parquet.read(spark, root)
     // NULL predicate = no match (see deleteByQuery) — without this a
     // NULL-valued row in an affected partition is neither transformed
     // nor carried by `!predicate`, i.e. silently dropped.
@@ -935,7 +941,7 @@ object LogStore {
   }
 
   def readAlias(spark: SparkSession, aliasFile: String): DataFrame =
-    spark.read.parquet(resolveAlias(spark, aliasFile))
+    Parquet.read(spark, resolveAlias(spark, aliasFile))
 
   /** A13 — federated read: one query over SEVERAL aliased stores
     * (Discover's "Change index pattern" selecting a multi-index
@@ -1047,7 +1053,7 @@ object LogStore {
     val sizes = perFile.toSeq.toDF("log_date", "source", "bytes")
       .groupBy(col("log_date"), col("source"))
       .agg(count(lit(1)).as("n_files"), sum(col("bytes")).as("store_bytes"))
-    val counts = spark.read.parquet(root)
+    val counts = Parquet.read(spark, root)
       .groupBy(col("log_date").cast("string").as("log_date"), col("source"))
       .agg(count(lit(1)).as("n_docs"))
     counts.join(sizes, Seq("log_date", "source"), "left")
@@ -1134,7 +1140,7 @@ object LogStore {
 
   /** Merge-on-read: latest version per doc id, tombstones dropped. */
   def readLatest(spark: SparkSession, root: String): DataFrame = {
-    val all = spark.read.parquet(root)
+    val all = Parquet.read(spark, root)
     val payload = all.columns.filterNot(Seq("doc_id", "seq", "deleted").contains)
     all
       .groupBy(col("doc_id"))
@@ -1218,7 +1224,7 @@ object LogStore {
   def writeBloomIndex(spark: SparkSession, root: String, column: String): String = {
     val path = bloomIndexPath(root, column)
     val pos = explode(array(bloomPositions(col(column)): _*)).as("pos")
-    spark.read.parquet(root)
+    Parquet.read(spark, root)
       .select(col("log_date").cast("string").as("log_date"), col("source"), pos)
       .select(col("log_date"), col("source"),
         (col("pos") / 64).cast("long").as("word"),
@@ -1241,7 +1247,7 @@ object LogStore {
       .select((col("pos") / 64).cast("long").as("word"),
         call_function("shiftleft", lit(1L), (col("pos") % 64).cast("int")).as("mask"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).distinct.toSeq
-    val idx = spark.read.parquet(bloomIndexPath(root, column))
+    val idx = Parquet.read(spark, bloomIndexPath(root, column))
     // per sidecar row, how many of the distinct probe bits it satisfies;
     // a partition qualifies when EVERY probe bit is set somewhere in it
     val hit = posRow.map { case (w, mk) =>
@@ -1263,7 +1269,7 @@ object LogStore {
   def readWithBloomIndex(spark: SparkSession, root: String, column: String,
                          value: String): DataFrame = {
     val cands = bloomCandidates(spark, root, column, value)
-    val base = spark.read.parquet(root)
+    val base = Parquet.read(spark, root)
     if (cands.isEmpty) return base.filter(lit(false))
     // exact per-pair disjunction, not isin(dates) AND isin(sources): the
     // cross product would scan non-candidate partitions whenever the

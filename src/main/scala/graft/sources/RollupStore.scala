@@ -72,7 +72,7 @@ object RollupStore {
     * parity `q_rollup_read`'s oracle and StreamingSpec prove.
     */
   def readSummary(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(root)
+    Parquet.read(spark, root)
       .groupBy(col("hour"), col("event_type"))
       .agg(sum(col("n")).as("n"),
         sum(col("value_cents")).as("value_cents"),

@@ -19,7 +19,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
