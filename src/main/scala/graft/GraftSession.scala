@@ -14,6 +14,12 @@ object GraftSession {
       // local-mode default; a real cluster raises this (or lets AQE
       // coalesce) — never leave Spark's 200 default on a laptop
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // local-mode default: more paths than this (32 by default) are
+      // listed by a Spark job, whose tasks in local mode run in the
+      // driver JVM against the same filesystem — slower than listing on
+      // the driver at any count (a 62-file micro-batch paid ~0.4 s for
+      // it); a cluster over an object store lowers this again
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // the driver-generated events table uses parquet TIMESTAMP(NANOS)

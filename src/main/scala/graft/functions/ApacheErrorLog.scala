@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.plans.RegexGroups
+
 /** Apache `error_log` parse battery.
   *
   * The reference's Kinesis agent ships BOTH access_log* AND error_log*
@@ -14,32 +16,28 @@ import org.apache.spark.sql.functions._
   *
   *   `[Wed Oct 11 14:32:52 2000] [error] [client 127.0.0.1] message`
   *
-  * Same design as the access battery: codegen'd builtin expressions
-  * (regexp_extract / to_timestamp), no UDFs.
+  * Same design as the access battery: one [[graft.plans.RegexGroups]]
+  * match per line, fields as builtin expressions over its groups, no
+  * UDFs.
   */
-object ApacheErrorLog {
+object ApacheErrorLog extends LineGrammar {
 
   /** `[ts] [level] [client ip] message` */
   val pattern: String =
     "^\\[([^\\]]+)\\] \\[([a-z]+)\\] \\[client ([^\\]]+)\\] (.*)$"
 
-  def tsRaw(line: Column): Column    = regexp_extract(line, pattern, 1)
-  def level(line: Column): Column    = regexp_extract(line, pattern, 2)
-  def clientIp(line: Column): Column = regexp_extract(line, pattern, 3)
-  def msg(line: Column): Column      = regexp_extract(line, pattern, 4)
+  protected def fieldsOf(m: Column): Seq[(String, Column)] = {
+    def g(i: Int) = RegexGroups.group(m, i)
+    Seq(
+      // `Wed Oct 11 14:32:52 2000` → TimestampType. Spark's pattern
+      // letter `E` (day-of-week) is format-only, so parsing drops the
+      // fixed-width `EEE ` prefix and reads the rest.
+      "ts" -> to_timestamp(substring(g(1), 5, 24), "MMM dd HH:mm:ss yyyy"),
+      "level" -> g(2), "client_ip" -> g(3), "msg" -> g(4))
+  }
 
-  /** `Wed Oct 11 14:32:52 2000` → TimestampType. Spark's pattern letter
-    * `E` (day-of-week) is format-only, so parsing drops the fixed-width
-    * `EEE ` prefix and reads the rest.
-    */
-  def ts(line: Column): Column =
-    to_timestamp(substring(tsRaw(line), 5, 24), "MMM dd HH:mm:ss yyyy")
-
-  /** All parsed fields as a struct. */
-  def parsed(line: Column): Column = struct(
-    ts(line).as("ts"), level(line).as("level"),
-    clientIp(line).as("client_ip"), msg(line).as("msg"))
-
-  /** Error-format grammar check (format dispatch / DLQ routing). */
-  def isValid(line: Column): Column = line.rlike(pattern)
+  def ts(line: Column): Column       = field(line, "ts")
+  def level(line: Column): Column    = field(line, "level")
+  def clientIp(line: Column): Column = field(line, "client_ip")
+  def msg(line: Column): Column      = field(line, "msg")
 }

@@ -3,18 +3,22 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.plans.RegexGroups
+
 /** Apache combined-log-format parse battery (SURVEY §2 B1/B2/B4).
   *
   * The reference's EC2 transformer only wraps the raw line as
   * {"logs": line} (reference: lib/computes/ec2/lambda/index.js:4-6) and
   * README.md:58 calls out the intended enhancement — "extract the
   * timestamp, HTTP, and browser information ... as separate attributes".
-  * This battery implements that enhancement Spark-first: every parser is
-  * a codegen'd builtin expression chain (regexp_extract / to_timestamp /
-  * case-when) — no Scala UDFs — so scan→parse→filter→agg stays inside
-  * one whole-stage-codegen span at 100 TB.
+  * This battery implements that enhancement Spark-first: the grammar is
+  * matched once per line by the codegen'd [[graft.plans.RegexGroups]]
+  * kernel and every field is a builtin expression over its groups
+  * (to_timestamp / cast / case-when) — no Scala UDFs — so
+  * scan→parse→filter→agg stays inside one whole-stage-codegen span at
+  * 100 TB.
   */
-object ApacheLog {
+object ApacheLog extends LineGrammar {
 
   /** Combined log format:
     * ip ident user [ts] "verb path proto" status bytes "referrer" "agent"
@@ -22,28 +26,30 @@ object ApacheLog {
   val pattern: String =
     "^(\\S+) (\\S+) (\\S+) \\[([^\\]]+)\\] \"(\\S+) (\\S+) (\\S+)\" (\\d+) (\\d+|-) \"([^\"]*)\" \"([^\"]*)\"$"
 
-  def ip(line: Column): Column       = regexp_extract(line, pattern, 1)
-  def tsRaw(line: Column): Column    = regexp_extract(line, pattern, 4)
-  def verb(line: Column): Column     = regexp_extract(line, pattern, 5)
-  def path(line: Column): Column     = regexp_extract(line, pattern, 6)
-  def proto(line: Column): Column    = regexp_extract(line, pattern, 7)
-  def status(line: Column): Column   = regexp_extract(line, pattern, 8).cast("long")
-  def bytes(line: Column): Column    = nullif(regexp_extract(line, pattern, 9), lit("-")).cast("long")
-  def referrer(line: Column): Column = regexp_extract(line, pattern, 10)
-  def agent(line: Column): Column    = regexp_extract(line, pattern, 11)
+  protected def fieldsOf(m: Column): Seq[(String, Column)] = {
+    def g(i: Int) = RegexGroups.group(m, i)
+    Seq(
+      "ip" -> g(1),
+      // `29/Jul/2021:15:32:33 +0000` → TimestampType (UTC session tz)
+      "ts" -> to_timestamp(g(4), "dd/MMM/yyyy:HH:mm:ss Z"),
+      "verb" -> g(5), "path" -> g(6), "proto" -> g(7),
+      "status" -> g(8).cast("long"),
+      // nullif(g, "-") written as a `when`: nullif's common-expression
+      // rewrite would move the group into a projection of its own,
+      // which matches the line a second time
+      "bytes" -> when(g(9) =!= "-", g(9)).cast("long"),
+      "referrer" -> g(10), "agent" -> g(11))
+  }
 
-  /** `29/Jul/2021:15:32:33 +0000` → TimestampType (UTC session tz). */
-  def ts(line: Column): Column =
-    to_timestamp(tsRaw(line), "dd/MMM/yyyy:HH:mm:ss Z")
-
-  /** All parsed fields as a struct — `select(parsed($"line").as("p"), $"p.*")`. */
-  def parsed(line: Column): Column = struct(
-    ip(line).as("ip"), ts(line).as("ts"), verb(line).as("verb"),
-    path(line).as("path"), proto(line).as("proto"), status(line).as("status"),
-    bytes(line).as("bytes"), referrer(line).as("referrer"), agent(line).as("agent"))
-
-  /** A line that fails the grammar → parse failure (DLQ routing, A5). */
-  def isValid(line: Column): Column = line.rlike(pattern)
+  def ip(line: Column): Column       = field(line, "ip")
+  def ts(line: Column): Column       = field(line, "ts")
+  def verb(line: Column): Column     = field(line, "verb")
+  def path(line: Column): Column     = field(line, "path")
+  def proto(line: Column): Column    = field(line, "proto")
+  def status(line: Column): Column   = field(line, "status")
+  def bytes(line: Column): Column    = field(line, "bytes")
+  def referrer(line: Column): Column = field(line, "referrer")
+  def agent(line: Column): Column    = field(line, "agent")
 
   /** B2 — browser family from user-agent (README.md:58 "browser
     * information"). Order matters: Chrome UAs contain "Safari".

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.RegexGroups
+
 /** C69 — grok pattern compiler (the `grok` ingest processor every
   * OpenSearch / Logstash log pipeline leans on; the reference's Lambda
   * transformers hand-regex their lines, and grok is the pattern-macro
@@ -13,8 +15,9 @@ import org.apache.spark.sql.functions._
   * `:float` third segment converts the capture). Compilation happens
   * ONCE on the driver — the output is a plain Java regex and an ordered
   * field list, so the runtime plan is the same codegen'd
-  * `regexp_extract` projection the hand-written parse batteries (B1/B1b)
-  * use: no interpretation, no UDFs, scan-parallel at any scale.
+  * [[graft.plans.RegexGroups]] projection the hand-written parse
+  * batteries (B1/B1b) use: no interpretation, no UDFs, scan-parallel at
+  * any scale.
   *
   * Library patterns use only non-capturing groups, so capture-group
   * indexes correspond 1:1 (in order) to the `%{NAME:field}` references —
@@ -80,24 +83,28 @@ object Grok {
     Compiled(regex, fields.toSeq.zipWithIndex.map { case ((f, t), i) => (f, i + 1, t) })
   }
 
-  /** Apply a compiled grok to a line column: one `regexp_extract` per
-    * field (codegen'd; the regex literal is compiled once per task by
-    * the JVM regex cache), `:int`/`:float` conversions as casts.
+  /** Apply a compiled grok to a line column: one [[graft.plans.RegexGroups]]
+    * match per line (codegen'd; the regex is compiled once per task),
+    * one field per capture, `:int`/`:float` conversions as casts.
     * A non-matching line yields empty-string/NULL fields, never an
     * error — grok's `_grok_parse_failure` convention maps to the DLQ
     * split (A5) downstream.
     */
   def parse(df: DataFrame, lineCol: String, grokExpr: String): DataFrame = {
     val c = compile(grokExpr)
+    val m = RegexGroups(col(lineCol), c.regex)
     val cols = c.fields.map { case (field, idx, conv) =>
-      val raw = regexp_extract(col(lineCol), c.regex, idx)
-      // a non-matching line extracts "" — nullif before the cast so ANSI
+      val raw = RegexGroups.group(m, idx)
+      // a non-matching line extracts "" — nulled before the cast so ANSI
       // mode yields NULL fields (the DLQ convention), not a cast error;
       // a MATCHED capture is shape-guaranteed by its pattern, so the
-      // cast itself can never throw
+      // cast itself can never throw. `when`, not nullif: nullif's
+      // common-expression rewrite would match the line a second time in
+      // a projection of its own
+      val nonEmpty = when(raw =!= "", raw)
       (conv match {
-        case "int"   => nullif(raw, lit("")).cast("long")
-        case "float" => nullif(raw, lit("")).cast("double")
+        case "int"   => nonEmpty.cast("long")
+        case "float" => nonEmpty.cast("double")
         case _       => raw
       }).as(field)
     }

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.plans.RegexGroups
+
 /** NGINX `error_log` parse battery.
   *
   * The reference's EKS workload is NGINX (reference:
@@ -15,11 +17,11 @@ import org.apache.spark.sql.functions._
   *    (2: No such file or directory), client: 10.1.2.3, server: localhost`
   *
   * Without this battery every EKS error line lands in the DLQ. Same
-  * design as the other batteries: codegen'd builtin expressions
-  * (regexp_extract / to_timestamp), no UDFs, so the dispatch stays one
-  * shuffle-free projection.
+  * design as the other batteries: one [[graft.plans.RegexGroups]] match
+  * per line, fields as builtin expressions over its groups, no UDFs, so
+  * the dispatch stays one shuffle-free projection.
   */
-object NginxErrorLog {
+object NginxErrorLog extends LineGrammar {
 
   /** `ts [level] pid#tid: *conn msg[, client: ip, server: name]`.
     * The message core is captured lazily so the optional trailing
@@ -31,25 +33,19 @@ object NginxErrorLog {
       "\\[([a-z]+)\\] (\\d+)#(\\d+): \\*(\\d+) " +
       "(.*?)(?:, client: ([0-9.]+), server: (\\S+))?$"
 
-  def tsRaw(line: Column): Column    = regexp_extract(line, pattern, 1)
-  def level(line: Column): Column    = regexp_extract(line, pattern, 2)
-  def pid(line: Column): Column      = regexp_extract(line, pattern, 3).cast("long")
-  def tid(line: Column): Column      = regexp_extract(line, pattern, 4).cast("long")
-  def conn(line: Column): Column     = regexp_extract(line, pattern, 5).cast("long")
-  def msg(line: Column): Column      = regexp_extract(line, pattern, 6)
-  def clientIp(line: Column): Column = regexp_extract(line, pattern, 7)
-  def server(line: Column): Column   = regexp_extract(line, pattern, 8)
+  protected def fieldsOf(m: Column): Seq[(String, Column)] = {
+    def g(i: Int) = RegexGroups.group(m, i)
+    Seq(
+      // `2026/08/12 10:00:00` → TimestampType (second precision)
+      "ts" -> to_timestamp(g(1), "yyyy/MM/dd HH:mm:ss"),
+      "level" -> g(2), "pid" -> g(3).cast("long"), "conn" -> g(5).cast("long"),
+      "client_ip" -> g(7), "msg" -> g(6))
+  }
 
-  /** `2026/08/12 10:00:00` → TimestampType (second precision). */
-  def ts(line: Column): Column =
-    to_timestamp(tsRaw(line), "yyyy/MM/dd HH:mm:ss")
-
-  /** All parsed fields as a struct (stream-dispatch shape). */
-  def parsed(line: Column): Column = struct(
-    ts(line).as("ts"), level(line).as("level"), pid(line).as("pid"),
-    conn(line).as("conn"), clientIp(line).as("client_ip"),
-    msg(line).as("msg"))
-
-  /** NGINX-error grammar check (format dispatch / DLQ routing). */
-  def isValid(line: Column): Column = line.rlike(pattern)
+  def ts(line: Column): Column       = field(line, "ts")
+  def level(line: Column): Column    = field(line, "level")
+  def pid(line: Column): Column      = field(line, "pid")
+  def conn(line: Column): Column     = field(line, "conn")
+  def clientIp(line: Column): Column = field(line, "client_ip")
+  def msg(line: Column): Column      = field(line, "msg")
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.functions.{ApacheErrorLog, ApacheLog, NginxErrorLog}
+import graft.plans.RegexGroups
 
 /** Structured-Streaming log pipeline (SURVEY §2 A3–A5, C10–C11).
   *
@@ -46,7 +47,11 @@ object LogPipeline {
     *  3. lines matching neither grammar keep their FULL original
     *     payload (envelope included) for the dead-letter sink.
     *
-    * All of it is one codegen'd projection — no shuffle, no UDF.
+    * Each grammar's [[graft.plans.RegexGroups]] match is selected once
+    * and both its validity and its fields are read from it, and a
+    * grammar is tried only when the ones before it failed: an access
+    * line is matched once, an error line twice. All of it is codegen'd
+    * projections — no shuffle, no UDF.
     */
   def transformed(raw: DataFrame): DataFrame =
     raw
@@ -56,15 +61,18 @@ object LogPipeline {
         when(col("source") === "eks", graft.sources.Envelopes.parseFluentBit(col("value"))))
       .withColumn("inner",
         coalesce(col("_fl.log"), col("_fb.log"), col("value")))
-      .withColumn("access_ok", ApacheLog.isValid(col("inner")))
-      .withColumn("error_ok",
-        !col("access_ok") && ApacheErrorLog.isValid(col("inner")))
+      .withColumn("_a", ApacheLog.groups(col("inner")))
+      .withColumn("access_ok", RegexGroups.matched(col("_a")))
+      .withColumn("_e", when(!col("access_ok"), ApacheErrorLog.groups(col("inner"))))
+      .withColumn("error_ok", !col("access_ok") && RegexGroups.matched(col("_e")))
+      .withColumn("_n",
+        when(!col("access_ok") && !col("error_ok"), NginxErrorLog.groups(col("inner"))))
       .withColumn("nginx_ok",
-        !col("access_ok") && !col("error_ok") && NginxErrorLog.isValid(col("inner")))
+        !col("access_ok") && !col("error_ok") && RegexGroups.matched(col("_n")))
       .withColumn("valid", col("access_ok") || col("error_ok") || col("nginx_ok"))
-      .withColumn("p", when(col("access_ok"), ApacheLog.parsed(col("inner"))))
-      .withColumn("e", when(col("error_ok"), ApacheErrorLog.parsed(col("inner"))))
-      .withColumn("ng", when(col("nginx_ok"), NginxErrorLog.parsed(col("inner"))))
+      .withColumn("p", when(col("access_ok"), ApacheLog.fromGroups(col("_a"))))
+      .withColumn("e", when(col("error_ok"), ApacheErrorLog.fromGroups(col("_e"))))
+      .withColumn("ng", when(col("nginx_ok"), NginxErrorLog.fromGroups(col("_n"))))
       .select(
         col("value").as("line"), col("source"), col("valid"),
         when(col("access_ok"), "access")
@@ -161,16 +169,6 @@ object LogPipeline {
       }
       .start()
 
-  /** A5b — idempotent micro-batch sink (exactly-once on top of
-    * foreachBatch's at-least-once): a crashed batch RE-RUNS with the
-    * same batchId, so a plain append duplicates its rows. The sink
-    * keys the layout on `epoch=batchId` and overwrites ONLY that
-    * epoch's directory — redelivery replaces its own previous (maybe
-    * partial) output instead of appending beside it, the standard
-    * partition-by-batch-id idempotence pattern. Readers treat `epoch`
-    * as one more partition column; downstream compaction (A8) folds
-    * epochs into the date layout on its own schedule.
-    */
   /** A5c — delivery-failure dead-lettering (the OTHER half of the
     * reference's failure handling: A5's DLQ catches PARSE failures,
     * while Firehose `retryOptions` + `s3BackupMode:
@@ -209,6 +207,16 @@ object LogPipeline {
     false
   }
 
+  /** A5b — idempotent micro-batch sink (exactly-once on top of
+    * foreachBatch's at-least-once): a crashed batch RE-RUNS with the
+    * same batchId, so a plain append duplicates its rows. The sink
+    * keys the layout on `epoch=batchId` and overwrites ONLY that
+    * epoch's directory — redelivery replaces its own previous (maybe
+    * partial) output instead of appending beside it, the standard
+    * partition-by-batch-id idempotence pattern. Readers treat `epoch`
+    * as one more partition column; downstream compaction (A8) folds
+    * epochs into the date layout on its own schedule.
+    */
   def idempotentBatchWrite(batch: DataFrame, root: String, batchId: Long,
                            partitionCols: Seq[String] = Seq("log_date")): Unit = {
     // fold-aware ingest (the other half of LogStore.foldEpochs's
