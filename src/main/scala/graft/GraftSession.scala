@@ -20,6 +20,15 @@ object GraftSession {
       // the driver at any count (a 62-file micro-batch paid ~0.4 s for
       // it); a cluster over an object store lowers this again
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
+      // local filesystem default: without libhadoop, Hadoop's local FS
+      // forks a `chmod` for every file create and mkdir and a `readlink`
+      // for every checkpoint-log rename (~7 ms each, on the sink's and
+      // the micro-batch's critical path); these classes do both through
+      // java.nio and keep the checksums (graft.sources.LocalFs). Unset,
+      // `file:` resolves by classpath order (Spark's jars: hive-exec's
+      // ProxyLocalFileSystem, which forks the same way)
+      .config("spark.hadoop.fs.file.impl", "graft.sources.ForkFreeLocalFileSystem")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.sources.ForkFreeLocalFs")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // the driver-generated events table uses parquet TIMESTAMP(NANOS)

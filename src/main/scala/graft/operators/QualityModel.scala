@@ -1,9 +1,12 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** E36 — MODEL-BASED quality filtering: distill the E14 rule battery
   * into a trained linear classifier (the fastText-/GPT-3-style quality
@@ -171,16 +174,17 @@ object QualityModel {
     * trained model is a BUILD ARTIFACT — the fit runs once per data
     * dir, scoring reuses it; the spec still exercises the live fit).
     * The artifact is the k+1 weights plus the k standardization pairs,
-    * stored as one line of text under tmpdir, `_COMPLETE`-free because
-    * the single-file write is atomic-enough via temp+rename.
+    * stored as one line of text under the scratch root, `_COMPLETE`-free
+    * because the single-file write is atomic-enough via temp+rename.
     */
   private def ensureModel(spark: SparkSession, dir: String): (Fit, Array[Double], Array[Double]) = {
     val fp = Similarity.dataFingerprintFor(spark, dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir#$fp".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft-qmodel-v2-$key.txt")
-    if (java.nio.file.Files.exists(path)) {
-      val nums = java.nio.file.Files.readString(path).trim.split(",").map(_.toDouble)
+    val path = new Path(Scratch.path(spark, s"qmodel-v2-${Scratch.digest(dir, fp)}.txt"))
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) {
+      val in = fs.open(path)
+      val nums = try new String(in.readAllBytes(), UTF_8).trim.split(",").map(_.toDouble)
+        finally in.close()
       val k = featureNames.length
       (Fit(nums.take(k), nums(k), Array.empty, nums(k + 1)),
         nums.slice(k + 2, 2 * k + 2), nums.slice(2 * k + 2, 3 * k + 2))
@@ -190,11 +194,12 @@ object QualityModel {
       val (mu, sd, _) = standardization(feats)
       val line = (f.weights :+ f.bias :+ f.accuracy).mkString(",") + "," +
         mu.mkString(",") + "," + sd.mkString(",")
-      val tmp = java.nio.file.Files.createTempFile(path.getParent, "qmodel", ".tmp")
-      java.nio.file.Files.writeString(tmp, line)
-      java.nio.file.Files.move(tmp, path,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      val tmp = new Path(path.getParent, s".${path.getName}-${java.util.UUID.randomUUID}.tmp")
+      val out = fs.create(tmp, false)
+      try out.write(line.getBytes(UTF_8)) finally out.close()
+      // a filesystem that will not rename onto an existing file lost a
+      // race to a writer of the same fit; its model is the one kept
+      if (!fs.rename(tmp, path)) fs.delete(tmp, false)
       (f, mu, sd)
     }
   }

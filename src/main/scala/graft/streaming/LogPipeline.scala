@@ -216,6 +216,12 @@ object LogPipeline {
     * partition-by-batch-id idempotence pattern. Readers treat `epoch`
     * as one more partition column; downstream compaction (A8) folds
     * epochs into the date layout on its own schedule.
+    *
+    * Its cost grows with the files it creates (a part file per
+    * `partitionCols` value per task, a `.crc` beside each, the
+    * committer's dirs). On a local session each is a create through
+    * `graft.sources.ForkFreeLocalFileSystem`, with no `chmod` process
+    * per file as in stock Hadoop without `libhadoop`.
     */
   def idempotentBatchWrite(batch: DataFrame, root: String, batchId: Long,
                            partitionCols: Seq[String] = Seq("log_date")): Unit = {

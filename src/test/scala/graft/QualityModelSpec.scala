@@ -68,6 +68,34 @@ class QualityModelSpec extends AnyFunSuite {
     assert(agree >= 0.93, s"agreement $agree")
   }
 
+  test("the fitted model is a scratch-root artifact that a second call reuses") {
+    val scratch = java.nio.file.Files.createTempDirectory("graft-qmodel-scratch")
+    def artifacts = scratch.toFile.listFiles().map(_.getName)
+      .filter(n => n.startsWith("qmodel-v2-") && n.endsWith(".txt")).toSeq
+    def jobs(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val group = s"qmodel-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val previous = spark.conf.getOption(graft.sources.Scratch.confKey)
+    spark.conf.set(graft.sources.Scratch.confKey, scratch.toString)
+    try {
+      var cold, warm: Array[org.apache.spark.sql.Row] = null
+      val coldJobs = jobs { cold = QualityModel.qualityModel(spark, TestSpark.sf).collect() }
+      val Seq(name) = artifacts
+      val written = java.nio.file.Files.getLastModifiedTime(scratch.resolve(name))
+      val warmJobs = jobs { warm = QualityModel.qualityModel(spark, TestSpark.sf).collect() }
+      assert(artifacts == Seq(name))
+      assert(java.nio.file.Files.getLastModifiedTime(scratch.resolve(name)) == written)
+      // the cold call's extra jobs are the fit's Newton rounds
+      assert(warmJobs < coldJobs, s"warm $warmJobs vs cold $coldJobs jobs")
+      assert(warm.toSeq == cold.toSeq)
+    } finally previous.fold(spark.conf.unset(graft.sources.Scratch.confKey))(
+      spark.conf.set(graft.sources.Scratch.confKey, _))
+  }
+
   test("isotonic calibration: minimax fit equals a classic stack-PAV replica (E128)") {
     val rows = QualityModel.isotonicCalibration(spark, TestSpark.sf).collect()
       .sortBy(_.getAs[Long]("bin"))
