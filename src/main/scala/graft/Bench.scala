@@ -133,10 +133,7 @@ object Bench {
   private def runBattery(spark: SparkSession, sfDir: String,
                          battery: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
                          reps: Int): Seq[Result] =
-    battery.sortBy { case (name, _) =>
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(name.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }.map { case (name, fn) =>
+    battery.sortBy(b => graft.sources.Scratch.digest(b._1)).map { case (name, fn) =>
       hygiene(spark)
       measure(spark, sfDir, fn, reps) match {
         case Right((w, g)) => Result(name, Some(w), g)

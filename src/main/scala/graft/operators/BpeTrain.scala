@@ -103,14 +103,10 @@ object BpeTrain {
     * Memoized per data dir like the IVF/graph/text indexes: a learned
     * tokenizer is a BUILD ARTIFACT — train once, tokenize forever —
     * and the K×2 sequential driver jobs are exactly the cost a bench
-    * should pay once, not per invocation (`_COMPLETE` written last;
-    * fingerprint key rebuilds on in-place data regeneration).
+    * should pay once, not per invocation ([[graft.sources.Scratch.ensure]]).
     */
   def learnMerges(spark: SparkSession, dir: String, k: Int = 12): DataFrame = {
-    val fp = Similarity.dataFingerprintFor(spark, dir, "documents.parquet")
-    val path = graft.sources.Scratch.ensure(spark,
-      s"graft-bpe-v1-${graft.sources.Scratch.digest(dir)}",
-      graft.sources.Scratch.digest(k.toString, fp)) { p =>
+    val path = graft.sources.Scratch.ensure(spark, "bpe-v1", dir, "documents.parquet", k) { p =>
       learnMergesDf(Tables.documents(spark, dir), k)
         .coalesce(1).write.mode("overwrite").parquet(s"$p/merges")
     }

@@ -31,9 +31,9 @@ import graft.sources.{Parquet, Tables}
   *    and keeps the best `beam`. All queries advance together: a hop
   *    is ONE join round for the whole query batch, not a per-query
   *    walk.
-  *  - Persistence: edges land as parquet keyed by the data
-  *    fingerprint (`_COMPLETE` written last) — build-once-probe-many,
-  *    the same contract as the IVF and inverted-text indexes.
+  *  - Persistence: edges land as a memoized scratch artifact
+  *    ([[graft.sources.Scratch.ensure]]) — build-once-probe-many, like
+  *    the IVF and inverted-text indexes.
   *
   * Scale: the build shuffles O(N·K²) scored pairs per round; a query
   * batch shuffles O(queries · beam · K) per hop. Neither ever joins
@@ -117,22 +117,17 @@ object GraphAnn {
     edges
   }
 
-  /** Build-once-probe-many: edges persist under a fingerprint key;
-    * `_COMPLETE` lands last so a half-written graph is rebuilt.
-    */
+  /** Build-once-probe-many ([[graft.sources.Scratch.ensure]]). */
   def ensureGraph(spark: SparkSession, dir: String,
                   rounds: Int = nnDescentRounds): String = {
-    val fp = Similarity.dataFingerprint(spark, dir)
     // v3 (r14): the seeding-cell count is now the auto-scaled nCells —
     // encode it so a graph built under a different schedule can never
     // be served stale (the r13 nngraph-key lesson). rounds rides in
-    // the FAMILY (both operating points coexist per dir), the data
-    // fingerprint + knobs in the generation (superseded ones swept).
+    // the NAME (both operating points coexist per dir), the knobs in
+    // the generation (superseded ones swept).
     val nc = Similarity.autoCells(Similarity.corpusN(spark, dir))
-    graft.sources.Scratch.ensure(spark,
-      s"graft-nngraph-v3-r$rounds-${graft.sources.Scratch.digest(dir)}",
-      graft.sources.Scratch.digest(s"$degree#$seedAssignments#$nc", fp))(
-      p => buildGraphAt(spark, dir, p, rounds))
+    graft.sources.Scratch.ensure(spark, s"nngraph-v3-r$rounds", dir, "embeddings.parquet",
+      degree, seedAssignments, nc)(p => buildGraphAt(spark, dir, p, rounds))
   }
 
   /** Build the graph for `dir`'s embeddings at an explicit path (the

@@ -174,11 +174,11 @@ object QualityModel {
     * trained model is a BUILD ARTIFACT — the fit runs once per data
     * dir, scoring reuses it; the spec still exercises the live fit).
     * The artifact is the k+1 weights plus the k standardization pairs,
-    * stored as one line of text under the scratch root, `_COMPLETE`-free
+    * stored as one line of text under the scratch root, marker-free
     * because the single-file write is atomic-enough via temp+rename.
     */
   private def ensureModel(spark: SparkSession, dir: String): (Fit, Array[Double], Array[Double]) = {
-    val fp = Similarity.dataFingerprintFor(spark, dir, "documents.parquet")
+    val fp = Scratch.fingerprint(spark, dir, "documents.parquet")
     val path = new Path(Scratch.path(spark, s"qmodel-v2-${Scratch.digest(dir, fp)}.txt"))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path)) {

@@ -91,41 +91,22 @@ object RollupStore {
 
   // ---- memoized batch build for the driver's query entry -------------
 
-  /** Digest of the events table's file listing (name, length, mtime) —
-    * in-place regenerated testdata rebuilds instead of serving stale
-    * partials (same contract as Similarity.dataFingerprint).
-    */
-  private def dataFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    if (fs.exists(p)) {
-      fs.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
-        md.update(s"${st.getPath.getName}#${st.getLen}#${st.getModificationTime};"
-          .getBytes("UTF-8"))
-      }
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   /** Build the rollup store for `dir`'s events table once, through the
     * real epoch write path: the table is split into 4 synthetic
     * micro-batches (event_id mod — every bucket receives partials from
     * several epochs, so the merge path is genuinely exercised), each
-    * written via [[rollupBatch]]. `_COMPLETE` lands after ALL epochs —
-    * a half-built store is rebuilt, never read.
+    * written via [[rollupBatch]]. The store is marked complete after
+    * ALL epochs ([[Scratch.ensure]]) — a half-built store is rebuilt,
+    * never read.
     */
-  def ensureRollup(spark: SparkSession, dir: String, nEpochs: Int = 4): String = {
-    val fp = dataFingerprint(spark, dir)
-    Scratch.ensure(spark, s"graft-rollup-v1-${Scratch.digest(dir)}",
-      Scratch.digest(nEpochs.toString, fp)) { path =>
+  def ensureRollup(spark: SparkSession, dir: String, nEpochs: Int = 4): String =
+    Scratch.ensure(spark, "rollup-v1", dir, "events.parquet", nEpochs) { path =>
       val ev = Tables.events(spark, dir)
         .select(col("ts"), col("event_type"), col("value"), col("event_id"))
       (0 until nEpochs).foreach { e =>
         rollupBatch(ev.filter(pmod(col("event_id"), lit(nEpochs)) === e), path, e.toLong)
       }
     }
-  }
 
   /** ★ `q_rollup_read` — the dashboard query against the SUMMARY store
     * (hourly histogram × event_type terms). The DuckDB oracle computes

@@ -1,11 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Resolution point for every engine-managed scratch artifact: the
-  * memoized index builds (IVF / PQ / NN-graph / inverted index /
-  * rollup / media / canonical-labels) and the parked corpus-sized
-  * intermediates (Dedup.parkTemp / ensurePark).
+  * memoized index builds and parked corpus-sized intermediates, all
+  * built through [[ensure]].
   *
   * These artifacts are written and read by SPARK JOBS — executor
   * tasks on a multi-node cluster — so the root must be a filesystem
@@ -40,51 +40,73 @@ object Scratch {
     * `hdfs://`/`s3a://` URI, which `java.io.File` would mangle).
     */
   def path(spark: SparkSession, name: String): String =
-    new org.apache.hadoop.fs.Path(root(spark), name).toString
+    new Path(root(spark), name).toString
 
-  /** Build-once memoization with generation cleanup — the ONE copy of
-    * the marker dance every memoized artifact (index, park, media
-    * table) previously re-implemented. The artifact lives at
+  /** Build-once memoization with generation cleanup — the ONE artifact
+    * lifecycle: every memoized scratch artifact (IVF / PQ / NN-graph /
+    * inverted index / rollup / media table / canonical map / BPE merges
+    * / parks) is keyed, marked and swept here. The artifact lives at
     * `<root>/<family>-<gen>`:
     *
-    *  - `family` is stable for the LOGICAL artifact: operator + layout
-    *    version + a digest of the data dir (the dir digest keeps
-    *    sf0.001/sf0.01/sf0.1 artifacts from sweeping each other);
-    *  - `gen` encodes everything that invalidates it: the data
-    *    fingerprint (file listing digest) and any derived knobs.
+    *  - `family = graft-<name>-digest(dir)`: stable for the LOGICAL
+    *    artifact. `name` carries the operator and its layout version;
+    *    the dir digest keeps sf0.001/sf0.01/sf0.1 artifacts from
+    *    sweeping each other;
+    *  - `gen = digest(knobs :+ fingerprint(dir, table))`: everything
+    *    that invalidates it — the derived knobs and the source table's
+    *    file listing, so regenerating the data in place rebuilds
+    *    instead of serving the old generation.
     *
-    * First call per (family, gen) pays `build(dir)`; the `_COMPLETE`
+    * First call per (family, gen) pays `build(path)`; the `_COMPLETE`
     * marker is written LAST so a crashed build is rebuilt, never read.
     * A fresh build first deletes the family's SUPERSEDED generations —
     * they belong to regenerated data, and without the sweep every
     * in-place regeneration would leak a corpus-sized artifact on the
     * shared scratch root forever. Lifetime contract: frames read from
     * a generation must be drained before its source data regenerates
-    * (the parkTemp rule — every caller consumes within one query
-    * invocation).
+    * (every caller consumes within one query invocation).
     */
-  def ensure(spark: SparkSession, family: String, gen: String)
-            (build: String => Unit): String = {
-    val dir = path(spark, s"$family-$gen")
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_COMPLETE")
+  def ensure(spark: SparkSession, name: String, dir: String, table: String,
+             knobs: Any*)(build: String => Unit): String = {
+    val family = s"graft-$name-${digest(dir)}"
+    val gen = digest(knobs.map(_.toString) :+ fingerprint(spark, dir, table): _*)
+    val artifact = path(spark, s"$family-$gen")
+    val marker = new Path(s"$artifact/_COMPLETE")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) {
-      val rootP = new org.apache.hadoop.fs.Path(root(spark))
       scala.util.Try {
-        fs.listStatus(rootP)
+        fs.listStatus(new Path(root(spark)))
           .filter(st => st.getPath.getName.startsWith(s"$family-") &&
             st.getPath.getName != s"$family-$gen")
           .foreach(st => fs.delete(st.getPath, true))
       }
-      build(dir)
+      build(artifact)
       fs.create(marker, true).close()
     }
-    dir
+    artifact
   }
 
-  /** md5 hex digest — the key material for family/gen names. */
+  /** Digest of `dir/table`'s file listing (name, length, mtime, sorted
+    * by name): changes whenever the table is regenerated in place. A
+    * missing table digests to the empty listing.
+    */
+  def fingerprint(spark: SparkSession, dir: String, table: String): String = {
+    val p = new Path(s"$dir/$table")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    if (fs.exists(p)) {
+      fs.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
+        md.update(s"${st.getPath.getName}#${st.getLen}#${st.getModificationTime};"
+          .getBytes("UTF-8"))
+      }
+    }
+    hex(md.digest())
+  }
+
+  /** md5 hex digest of the parts joined by `#`. */
   def digest(parts: String*): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.mkString("#").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    hex(java.security.MessageDigest.getInstance("MD5")
+      .digest(parts.mkString("#").getBytes("UTF-8")))
+
+  private def hex(bytes: Array[Byte]): String = bytes.map("%02x".format(_)).mkString
 }

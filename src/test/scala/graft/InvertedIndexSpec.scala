@@ -96,7 +96,7 @@ class InvertedIndexSpec extends AnyFunSuite {
 
   test("queries memoize the build: second invocation probes the existing index") {
     InvertedIndex.searchIndexed(spark, TestSpark.sf).collect()
-    val marker = new java.io.File(InvertedIndex.defaultPath(spark, TestSpark.sf), "_SUCCESS")
+    val marker = new java.io.File(InvertedIndex.ensureIndex(spark, TestSpark.sf), "_COMPLETE")
     assert(marker.exists())
     val built = marker.lastModified()
     InvertedIndex.searchIndexed(spark, TestSpark.sf).collect()

@@ -19,7 +19,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("feature extraction is deterministic; payloads are real per kind (PNG/WAV magic, video=doc bytes)") {
     val f1 = Multimodal.features(spark, TestSpark.sf).collect()
-    val marker = new java.io.File(Multimodal.mediaPath(spark, TestSpark.sf), "_SUCCESS")
+    val marker = new java.io.File(Multimodal.ensureMediaTable(spark, TestSpark.sf), "_COMPLETE")
     assert(marker.exists(), "features should persist the media table once per dir")
     val built = marker.lastModified()
     val f2 = Multimodal.features(spark, TestSpark.sf).collect()
