@@ -973,15 +973,11 @@ object LogStore {
     val hadoopPath = new org.apache.hadoop.fs.Path(root)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hadoopPath)) return ("red", Seq("store root missing"))
-    def dataFiles(p: org.apache.hadoop.fs.Path): Int = {
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) n += 1
-      }
-      n
-    }
+    // a hidden dir hides what is under it too (an epoch write's staging dir)
+    def dataFiles(p: org.apache.hadoop.fs.Path): Int =
+      fs.listStatus(p).iterator
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .map(f => if (f.isDirectory) dataFiles(f.getPath) else 1).sum
     val parts = fs.listStatus(hadoopPath).toSeq.filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith("log_date="))
     val empty = parts.filter(dataFiles(_) == 0).map(_.getName)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
+import graft.streaming.LogPipeline.idempotentBatchWrite
+
 /** A14 — materialized rollup / transform store (SURVEY §2).
   *
   * OpenSearch's ISM rollup and Transforms API continuously aggregate a
@@ -16,10 +18,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *    histogram × terms buckets) — corpus rows never land in the
   *    summary store, only bucket partials, so the store is
   *    buckets-per-epoch sized.
-  *  - Partials persist via the A5b epoch-idempotent layout
-  *    (`epoch=batchId`, whole-directory static overwrite): a
-  *    redelivered batch REPLACES its own partials instead of
-  *    double-counting — exactly-once on top of foreachBatch's
+  *  - Partials persist through the A5b epoch-idempotent sink
+  *    (`LogPipeline.idempotentBatchWrite`, `epoch=batchId` replaced
+  *    whole): a redelivered batch REPLACES its own partials instead
+  *    of double-counting — exactly-once on top of foreachBatch's
   *    at-least-once.
   *  - The summary read is merge-on-read: re-aggregate the partials.
   *    This only works because every stored metric is DECOMPOSABLE
@@ -42,15 +44,14 @@ object RollupStore {
     * exact integer cents so merge order can never change a result.
     */
   def rollupBatch(batch: DataFrame, root: String, batchId: Long): Unit =
-    batch
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"),
-        min(col("value")).as("value_min"),
-        max(col("value")).as("value_max"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .parquet(s"$root/epoch=$batchId")
+    idempotentBatchWrite(
+      batch
+        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 100).cast("long")).as("value_cents"),
+          min(col("value")).as("value_min"),
+          max(col("value")).as("value_max")),
+      root, batchId, Seq.empty)
 
   /** Continuous maintenance: every micro-batch folds its partials into
     * the store. AvailableNow for the spec harness; a production stream
@@ -85,9 +86,7 @@ object RollupStore {
     * root untouched (no in-place delete-then-merge window).
     */
   def compactInto(spark: SparkSession, root: String, dstRoot: String): Unit =
-    readSummary(spark, root).write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .parquet(s"$dstRoot/epoch=0")
+    idempotentBatchWrite(readSummary(spark, root), dstRoot, 0L, Seq.empty)
 
   // ---- memoized batch build for the driver's query entry -------------
 

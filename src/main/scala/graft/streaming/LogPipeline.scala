@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.functions.{ApacheErrorLog, ApacheLog, NginxErrorLog}
 import graft.plans.RegexGroups
+import graft.sources.EpochWriter
+import graft.sources.EpochWriter.Route
 
 /** Structured-Streaming log pipeline (SURVEY §2 A3–A5, C10–C11).
   *
@@ -121,18 +123,22 @@ object LogPipeline {
       .withWatermark("ts", period)
       .dropDuplicatesWithinWatermark(Seq("rule_id", "ip"))
 
-  /** A3–A5 + A5b: start the ingest query. Each micro-batch dual-writes
-    * through the EPOCH-IDEMPOTENT sink (the default path, not an
-    * opt-in): parsed rows → `logs/epoch=<batchId>/log_date=…/source=…`
-    * ("the index"), unparseable rows → `dlq/epoch=<batchId>` — a
-    * crash-redelivered batch re-runs with the same batchId and
-    * REPLACES its own epoch directory instead of appending beside it,
-    * so the default delivery contract is exactly-once into the store
-    * (the posture of the reference's Firehose→index path,
-    * utils.ts:68). Readers see `epoch` as one more partition column;
-    * `LogStore.compact` folds epochs into the plain date layout on its
-    * own schedule. The batch is persisted so the valid/DLQ split
-    * doesn't recompute the parse.
+  /** A3–A5 + A5b: start the ingest query. Each micro-batch is ONE
+    * Spark job through the EPOCH-IDEMPOTENT sink (the default path, not
+    * an opt-in, [[graft.sources.EpochWriter]]): its tasks read the
+    * parsed batch once and route each row by `valid` — parsed rows →
+    * `logs/epoch=<batchId>/log_date=…/source=…` ("the index"),
+    * unparseable rows → `dlq/epoch=<batchId>`. Nothing is persisted:
+    * the parse runs once because both outputs come from the same task
+    * pass. Each output's Hadoop conf is broadcast once per batch, the
+    * files are staged under a hidden dir and each epoch dir is
+    * committed by one rename. A crash-redelivered batch re-runs with
+    * the same batchId and REPLACES its own epoch directories instead of
+    * appending beside them, so the default delivery contract is
+    * exactly-once into the store (the posture of the reference's
+    * Firehose→index path, utils.ts:68). Readers see `epoch` as one more
+    * partition column; `LogStore.compact` folds epochs into the plain
+    * date layout on its own schedule.
     *
     * `trigger` and `maxFilesPerTrigger` are the Firehose buffering
     * hints re-expressed (utils.ts:69-72's 60 s / 1 MB): a
@@ -148,23 +154,23 @@ object LogPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        // A5c: bounded-retry delivery; a batch the store refuses lands
-        // whole (with the error) in the delivery dead-letter area
-        // instead of stalling the stream
-        deliverWithRetry(batch.filter(col("valid")).drop("valid", "line")) {
-          b => idempotentBatchWrite(b, s"$outDir/logs", batchId,
-            Seq("log_date", "source"))
+        val parsed = batch.columns.filterNot(Set("valid", "line")).toSeq
+        val deadLetters = Route(s"$outDir/dlq", !col("valid"), Seq("source", "line"))
+        // A5c: bounded-retry delivery; each attempt is the whole one-job
+        // write, and a batch the store refuses lands (with the error) in
+        // the delivery dead-letter area instead of stalling the stream
+        deliverWithRetry(batch) { b =>
+          EpochWriter.write(b, batchId, Seq(
+            Route(s"$outDir/logs", col("valid"), parsed, Seq("log_date", "source")),
+            deadLetters))
         } { (b, e) =>
-          idempotentBatchWrite(
+          EpochWriter.write(
             b.withColumn("delivery_error",
               lit(Option(e.getMessage).getOrElse(e.getClass.getName))),
-            s"$outDir/delivery_dlq", batchId, Seq.empty)
+            batchId, Seq(
+              Route(s"$outDir/delivery_dlq", col("valid"), parsed :+ "delivery_error"),
+              deadLetters))
         }
-        idempotentBatchWrite(batch.filter(!col("valid"))
-          .select(col("source"), col("line")),
-          s"$outDir/dlq", batchId, Seq.empty)
-        batch.unpersist()
         ()
       }
       .start()
@@ -210,50 +216,29 @@ object LogPipeline {
   /** A5b — idempotent micro-batch sink (exactly-once on top of
     * foreachBatch's at-least-once): a crashed batch RE-RUNS with the
     * same batchId, so a plain append duplicates its rows. The sink
-    * keys the layout on `epoch=batchId` and overwrites ONLY that
-    * epoch's directory — redelivery replaces its own previous (maybe
-    * partial) output instead of appending beside it, the standard
+    * keys the layout on `epoch=batchId` and replaces ONLY that epoch's
+    * directory — redelivery replaces its own previous (maybe partial)
+    * output instead of appending beside it, the standard
     * partition-by-batch-id idempotence pattern. Readers treat `epoch`
     * as one more partition column; downstream compaction (A8) folds
     * epochs into the date layout on its own schedule.
     *
-    * Its cost grows with the files it creates (a part file per
-    * `partitionCols` value per task, a `.crc` beside each, the
-    * committer's dirs). On a local session each is a create through
-    * `graft.sources.ForkFreeLocalFileSystem`, with no `chmod` process
-    * per file as in stock Hadoop without `libhadoop`.
+    * The one-route call of [[graft.sources.EpochWriter]], which
+    * `startIngest` uses for its two routes: one Spark job, the route's
+    * Hadoop conf broadcast once, files staged under a hidden dir of
+    * `root` and committed by deleting `epoch=batchId` and renaming the
+    * staged dir into its place. It keeps the fold-aware prelude: a
+    * batch at or below the root's fold watermark is a no-op, and a
+    * folded root first re-homes its flat dirs under `epoch=-1`.
     */
   def idempotentBatchWrite(batch: DataFrame, root: String, batchId: Long,
                            partitionCols: Seq[String] = Seq("log_date")): Unit = {
-    // fold-aware ingest (the other half of LogStore.foldEpochs's
-    // contract): once a compaction has flattened this root, (a) a
-    // crash-REPLAYED batch at or below the fold watermark is a no-op —
-    // its rows ARE the folded ones, and writing epoch=<id> again would
-    // duplicate them; (b) a NEW batch first re-homes the flat
-    // log_date= dirs under the reserved epoch=-1 partition so the root
-    // carries ONE directory scheme — without this, epoch=N beside
-    // log_date=D makes Spark partition discovery throw and the store
-    // unreadable for every consumer including the next compaction.
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) {
-      if (graft.sources.LogStore.readFoldHwm(fs, rootPath).exists(batchId <= _))
-        return
-      graft.sources.LogStore.rehomeIntoReservedEpoch(fs, rootPath)
-    }
     val dated =
       if (partitionCols.contains("log_date") && !batch.columns.contains("log_date"))
         batch.withColumn("log_date", to_date(col("ts")))
       else batch
-    val w = dated.write.mode("overwrite")
-      // pinned per-write: a session-level partitionOverwriteMode=dynamic
-      // would only replace the log_date partitions present in the RETRY,
-      // letting partitions from a partial first attempt survive and
-      // duplicate — static replaces the whole epoch directory
-      .option("partitionOverwriteMode", "static")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$root/epoch=$batchId")
+    EpochWriter.write(dated, batchId,
+      Seq(Route(root, lit(true), dated.columns.toSeq, partitionCols)))
   }
 
   /** A27s — STREAMING upserts into the document-identity store: the

@@ -304,16 +304,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(!ok2 && dead.contains((2L, "disk full")))
 
     // wired into the DEFAULT ingest path: a read-only logs dir refuses
-    // the epoch write and the batch lands in delivery_dlq instead
+    // the epoch write and the parsed rows land in delivery_dlq instead,
+    // while the malformed line still reaches the parse dead-letter store
     val in = tmpDir("in-dlq"); val out = tmpDir("out-dlq")
     Files.createDirectories(Paths.get(s"$in/ec2"))
-    Files.writeString(Paths.get(s"$in/ec2/a.log"), s"$goodLine\n")
+    Files.writeString(Paths.get(s"$in/ec2/a.log"), s"$goodLine\n$badLine\n")
     // a FILE at the logs path makes the directory write fail
     Files.writeString(Paths.get(s"$out/logs"), "not a directory")
     LogPipeline.startIngest(spark, in, out, tmpDir("ckpt-dlq")).awaitTermination()
     val dlq = spark.read.parquet(s"$out/delivery_dlq")
     assert(dlq.count() == 1)
     assert(dlq.columns.contains("delivery_error"))
+    assert(dlq.filter(col("delivery_error").isNull).isEmpty)
+    val parseDlq = spark.read.parquet(s"$out/dlq")
+    assert(parseDlq.select("line").as[String].collect().toSeq == Seq(badLine))
+    assert(!Files.exists(Paths.get(s"$out/logs/epoch=0")))
+    Seq("dlq", "delivery_dlq").foreach { d =>
+      assert(new java.io.File(s"$out/$d").list().toSeq.filterNot(_.startsWith(".")) == Seq("epoch=0"), d)
+    }
   }
 
   test("KinesisLines binding: stream-per-source expansion, contract projection, DataSource resolution (A3b)") {
