@@ -61,14 +61,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Three driver batteries in a row tripped the budget gate on queries
   * that passed idle re-runs — each time a transient box-contention
-  * window inflating a contiguous ALPHABETICAL block. Two structural
-  * fixes: (1) execution order is md5(name), so a contention window
-  * lands on scattered unrelated queries (noise the median absorbs)
-  * instead of a correlated family block; (2) after the battery, any
-  * query whose median breaches its tools/bench_budget.json budget
-  * (check_bench's 1.5x rule) is re-measured once and the better
-  * median reported — a contention victim collapses, a genuine
-  * regression stays visibly over budget.
+  * window inflating a contiguous ALPHABETICAL block. Execution order
+  * is md5(name), so a contention window lands on scattered unrelated
+  * queries (noise the median absorbs) instead of a correlated family
+  * block.
   */
 object Bench {
   private def ms3(v: Double): Double = math.round(v * 1000) / 1000.0
@@ -113,11 +109,10 @@ object Bench {
   }
 
   /** One query's result: median wall seconds (None when every rep
-    * threw, the cause then in `error`), gc ms during the median rep, and
-    * whether the median was re-measured (see `healBreaches`).
+    * threw, the cause then in `error`) and gc ms during the median rep.
     */
   private case class Result(name: String, wall: Option[Double], gc: Long,
-                            healed: Boolean = false, error: Option[String] = None)
+                            error: Option[String] = None)
 
   /** One `Result` per query.
     *
@@ -140,59 +135,6 @@ object Bench {
         case Left(err) => Result(name, None, -1L, error = Some(err))
       }
     }
-
-  /** Per-query seconds budgets (tools/bench_budget.json) if present —
-    * the same file check_bench.py gates on. Absent file → no healing.
-    */
-  private def readBudgets(): Map[String, Double] = {
-    val p = java.nio.file.Paths.get("tools/bench_budget.json")
-    if (!java.nio.file.Files.isReadable(p)) return Map.empty
-    val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
-
-  /** Second half of the round-12 de-flake: any query whose battery
-    * median breaches its budget (check_bench's rule: wall > 1.5 x
-    * max(budget, 0.15 s)) gets ONE post-battery re-measurement — by
-    * then any transient contention window has usually passed — and
-    * reports the BETTER of the two. A genuine regression stays over
-    * budget (re-running doesn't make slow code fast); a contention
-    * victim collapses back under it. bench_out.json's gc_ms column
-    * still self-diagnoses whichever rep is reported. The returned
-    * healed flag marks every RE-MEASURED query (the published number is
-    * min-of-two-medians either way), so re-baselining and the gate can
-    * tell a healed median from a clean one instead of silently
-    * ratcheting budgets toward the lucky side.
-    */
-  private def healBreaches(spark: SparkSession, sfDir: String,
-                           results: Seq[Result], reps: Int): Seq[Result] = {
-    val budgets = readBudgets()
-    results.map {
-      case r @ Result(name, Some(w), _, _, _)
-        if budgets.get(name).exists(b => w > 1.5 * math.max(b, 0.15)) =>
-        hygiene(spark)
-        measure(spark, sfDir, SparkEntry.queries(name), reps) match {
-          // every retime failed: the published median was never actually
-          // re-measured, so it must NOT carry the healed flag (the flag's
-          // contract is "this number is a min-of-two-medians")
-          case Left(_) => r
-          case Right((w2, g2)) =>
-            if (w2 < w) r.copy(wall = Some(w2), gc = g2, healed = true) else r.copy(healed = true)
-        }
-      case r => r
-    }
-  }
-
-  /** JSON string literal: quotes, backslashes and control characters
-    * escaped (exception messages span lines).
-    */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
@@ -222,8 +164,7 @@ object Bench {
       try graft.sources.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    val ordered = healBreaches(spark, sfDir,
-      runBattery(spark, sfDir, battery, reps), reps).sortBy(_.name)
+    val ordered = runBattery(spark, sfDir, battery, reps).sortBy(_.name)
     spark.stop()
     def ms(r: Result): Long = r.wall.map(t => math.round(t * 1000)).getOrElse(-1L)
 
@@ -240,16 +181,12 @@ object Bench {
         "\"" + r.name + "\":" + (if (ms(r) < 0) "-1" else ms3(ms(r) / 1000.0).toString)
       }.mkString("{", ",", "}")
       val gcQs = ordered.map(r => "\"" + r.name + "\":" + r.gc).mkString("{", ",", "}")
-      // healed = queries whose published median is min-of-two (budget
-      // breach re-measured post-battery); lets check_bench --update
-      // prefer clean medians when re-baselining
-      val healedQs = ordered.filter(_.healed).map("\"" + _.name + "\"").mkString("[", ",", "]")
       // errors = the last rep's exception of every query reporting -1
-      val errorQs = ordered.flatMap(r => r.error.map(e => "\"" + r.name + "\":" + jsonStr(e)))
+      val errorQs = ordered.flatMap(r => r.error.map(e => "\"" + r.name + "\":" + Verify.jsonStr(e)))
         .mkString("{", ",", "}")
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"healed":$healedQs,"errors":$errorQs,"sf":$sfNum}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"errors":$errorQs,"sf":$sfNum}""")
       finally w.close()
     } catch { case _: Throwable => () }
     println(line)

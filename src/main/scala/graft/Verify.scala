@@ -1,8 +1,23 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.registry entry's result → parquet,
+  * plus oracle_sql.json, for a DuckDB compare (tools/check.py). */
 object Verify {
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in hand-written oracle SQL would otherwise
+    * make a JSON reader reject the whole oracle_sql.json, and exception
+    * messages span lines.
+    */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     // optional third arg (local iteration only — the driver passes two):
@@ -10,31 +25,20 @@ object Verify {
     // oracle_sql.json so tools/check.py compares just that subset
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    def keep(name: String): Boolean = only.forall(_.contains(name))
+    val entries = SparkEntry.registry.filter(kv => only.forall(_.contains(kv._1)))
     val spark = GraftSession.local("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    entries.foreach { case (name, entry) =>
+      try entry.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         // Throwable.toString: the class name, then the message if any
         System.err.println(s"[verify] $name failed: $e")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = entries.collect { case (k, SparkEntry.Entry(_, Some(sql))) =>
+      s"${jsonStr(k)}: ${jsonStr(sql)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1123,12 +1123,13 @@ object LogStore {
     * no merge debt. `seq` is caller-supplied and monotone per id (the
     * OpenSearch `_seq_no` contract) so replay/redelivery is idempotent:
     * re-writing an old seq can never resurrect an old version.
+    * `deleted` is evaluated per row of `batch`: true marks a tombstone.
     */
   def upsertWrite(batch: DataFrame, root: String, seq: Long,
-                  deleted: Boolean = false): Unit =
+                  deleted: Column = lit(false)): Unit =
     batch
       .withColumn("seq", lit(seq))
-      .withColumn("deleted", lit(deleted))
+      .withColumn("deleted", deleted)
       .withColumn("log_date", to_date(col("ts")))
       .write.mode("append")
       .partitionBy("log_date", "source")

@@ -261,15 +261,10 @@ object LogPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        val live = batch.filter(col("op") =!= "delete").drop("op")
-        val dead = batch.filter(col("op") === "delete").drop("op")
-        if (!live.isEmpty)
-          graft.sources.LogStore.upsertWrite(live, outDir, seq = batchId)
-        if (!dead.isEmpty)
-          graft.sources.LogStore.upsertWrite(dead, outDir, seq = batchId, deleted = true)
-        batch.unpersist()
-        ()
+        // one append per micro-batch: each row's op sets its tombstone flag
+        graft.sources.LogStore.upsertWrite(
+          batch.withColumn("deleted", col("op") === "delete").drop("op"), outDir,
+          seq = batchId, deleted = col("deleted"))
       }
       .start()
 

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke: entry + every declared query runs and yields rows at sf0.001,
-  * and every oracleSql key has a matching queries entry.
+  * and exactly the declared rows-only queries lack a DuckDB oracle.
   */
 class EntrySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -12,9 +12,11 @@ class EntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys ⊆ queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
+  test("only the rows-only queries lack an oracle; every other oracle is non-blank") {
+    val rowsOnly = SparkEntry.registry.collect { case (n, e) if e.oracle.isEmpty => n }.toSet
+    assert(rowsOnly == Set("q_anomaly_stream", "q_compression_ratio"), s"rows-only: $rowsOnly")
+    val blank = SparkEntry.registry.collect { case (n, e) if e.oracle.exists(_.trim.isEmpty) => n }
+    assert(blank.isEmpty, s"blank oracle SQL: $blank")
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>

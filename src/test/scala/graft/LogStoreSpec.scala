@@ -710,7 +710,7 @@ class LogStoreSpec extends AnyFunSuite {
       .withColumn("source", lit("ec2"))
     LogStore.upsertWrite(batch(Seq((1L, "v1"), (2L, "v1"), (3L, "v1")), 1), root, seq = 1)
     LogStore.upsertWrite(batch(Seq((1L, "v2")), 2), root, seq = 2)       // replace id 1
-    LogStore.upsertWrite(batch(Seq((2L, "gone")), 2), root, seq = 3, deleted = true) // delete id 2
+    LogStore.upsertWrite(batch(Seq((2L, "gone")), 2), root, seq = 3, deleted = lit(true)) // delete id 2
     val latest = LogStore.readLatest(spark, root)
       .select("doc_id", "body").as[(Long, String)].collect().toMap
     assert(latest == Map(1L -> "v2", 3L -> "v1"))

@@ -710,7 +710,25 @@ class StreamingSpec extends AnyFunSuite {
     run()
     ms.addData((1L, ts(1), "ec2", "v2", "index"), (2L, ts(1), "ec2", "", "delete"),
       (3L, ts(1), "ec2", "v1", "index"))
-    run()
+    // a micro-batch mixing index and delete ops is ONE append job
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try run()
+    finally {
+      org.apache.spark.GraftSparkBridge.waitListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 1, s"second micro-batch ran ${jobs.get} jobs")
+    // every version row: seq = batchId, the delete op a tombstone
+    val raw = spark.read.parquet(s"$root/docs").select("doc_id", "seq", "deleted")
+      .as[(Long, Long, Boolean)].collect().sorted.toSeq
+    assert(raw == Seq((1L, 0L, false), (1L, 1L, false), (2L, 0L, false), (2L, 1L, true),
+      (3L, 1L, false)), s"got $raw")
     val latest = graft.sources.LogStore.readLatest(spark, s"$root/docs")
       .select("doc_id", "body").as[(Long, String)].collect().toMap
     assert(latest == Map(1L -> "v2", 3L -> "v1"), s"got $latest")

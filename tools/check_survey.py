@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""SURVEY §2 superset gate: every query name in `SparkEntry.queries`
+"""SURVEY §2 superset gate: every query name in `SparkEntry.registry`
 must be cited by at least one §2 inventory row (the checklist the judge
 walks line by line must never undercount the shipped surface — r10
 shipped three green queries with no row).
@@ -16,7 +16,7 @@ SURVEY = "SURVEY.md"
 
 def main() -> int:
     src = open(ENTRY).read()
-    # keys of the queries map: "q_name" -> (...)
+    # keys of the registry map: "q_name" -> Entry(...)
     queries = set(re.findall(r'"(q_[a-z0-9_]+)"\s*->', src))
     if not queries:
         print("no queries parsed from SparkEntry — parser broken?")
