@@ -41,11 +41,14 @@ import org.apache.spark.util.SerializableConfiguration
   * description and its stats tracker each hold a copy), and no commit
   * protocol runs: tasks write into a hidden `_staging-epoch-N-<write>`
   * dir under the root, named for this call alone, and the commit is a
-  * delete of `epoch=N` plus one rename of that dir into its place.
-  * Readers (Spark's listing, `Parquet.read`, `LogStore.createPit`,
-  * `LogStore.storeHealth`) skip the `_` name, so a staging dir left by
-  * a killed or failed write stays invisible until the next write of
-  * that epoch removes it.
+  * delete of `epoch=N` plus one rename of that dir into its place; it
+  * does not go through `LogStore.swapIn`, because an epoch lost
+  * between the two is rewritten by checkpoint replay.
+  * Readers (Spark's listing, `Parquet.read`, and `Parquet.dataFiles`,
+  * which `LogStore.createPit`, `storeHealth`, `indexStats`,
+  * `followTick` and the ISM tick list through) skip the `_` name, so a
+  * staging dir left by a killed or failed write stays invisible until
+  * the next write of that epoch removes it.
   *
   * A failed job does not stop its other running tasks; they are only
   * marked killed. Such a task checks the mark before each file it

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *
   *   - hot (age ≤ compactAfterDays): untouched — still receiving reads
   *     and possibly late appends;
-  *   - warm: force_merge — the partition is rewritten to one file via
-  *     write-then-swap (A8's crash-safety argument applies per
-  *     partition);
+  *   - warm: force_merge — the partition is rewritten to one file per
+  *     source in a sibling tmp and swapped in by `LogStore.swapIn`, the
+  *     swap every store rewrite uses; a tick first restores what a
+  *     crashed swap left parked (`LogStore.recoverParkedPartitions`);
   *   - cold: copied into the snapshot dir once (manifest-tracked,
   *     A11's restore contract) — the live partition stays searchable;
   *   - delete: the partition directory is dropped (A9) — its snapshot,
@@ -49,16 +50,8 @@ object Ism {
     val asOfDay = java.time.LocalDate.parse(asOf)
     if (!fs.exists(rootPath))
       return Seq.empty[(String, String, String)].toDF("log_date", "phase", "action")
-
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val it = fs.listFiles(p, true)
-      val out = scala.collection.mutable.ListBuffer.empty[org.apache.hadoop.fs.Path]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) out += f.getPath
-      }
-      out.toSeq
-    }
+    LogStore.recoverParkedPartitions(spark, root)
+    val tmpRoot = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + ".ism-tmp")
 
     val parts = fs.listStatus(rootPath).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("log_date="))
@@ -80,20 +73,17 @@ object Ism {
           (date, "cold", "snapshotted")
         }
       } else if (age > policy.compactAfterDays) {
-        if (parquetFiles(st.getPath).length <= countSources(fs, st.getPath))
+        if (Parquet.dataFiles(fs, st.getPath).length <= countSources(fs, st.getPath))
           (date, "warm", "noop")
         else {
-          // per-partition force_merge, write-then-swap (A8's pattern
-          // scoped to one date): the live partition stays readable
-          // until the atomic rename
-          val tmp = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + s".ism-tmp/$name")
+          // the live partition stays readable until the swap
+          val tmp = new org.apache.hadoop.fs.Path(tmpRoot, name)
           Parquet.read(spark, st.getPath.toString)
             .repartition(1, col("source"))
             .write.mode("overwrite").partitionBy("source")
             .parquet(tmp.toString)
-          fs.delete(st.getPath, true)
-          fs.rename(tmp, st.getPath)
-          fs.delete(tmp.getParent, true)
+          LogStore.swapIn(fs, tmp, st.getPath)
+          fs.delete(tmpRoot, true)
           (date, "warm", "compacted")
         }
       } else (date, "hot", "noop")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,28 +94,12 @@ object LogStore {
     * paths, not data).
     */
   def createPit(spark: SparkSession, root: String): Seq[String] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootUri = fs.makeQualified(rootPath).toUri.getPath.stripSuffix("/")
-    // hidden-ness applies to every path SEGMENT below the root, not just
-    // the filename: a concurrent in-flight Spark write stages uncommitted
-    // part files under `_temporary/...`, and pinning those would break
-    // the snapshot-consistency contract the manifest exists to give
-    def visible(p: org.apache.hadoop.fs.Path): Boolean = {
-      val rel = fs.makeQualified(p).toUri.getPath.stripPrefix(rootUri)
-      rel.split('/').filter(_.nonEmpty)
-        .forall(seg => !seg.startsWith("_") && !seg.startsWith("."))
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(rootPath)) {
-      val it = fs.listFiles(rootPath, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet") && visible(st.getPath))
-          out += st.getPath.toString
-      }
-    }
-    out.sorted.toSeq
+    // a concurrent in-flight write's part files sit under a hidden
+    // `_temporary/...` dir; pinning those would break the snapshot
+    // consistency the manifest exists to give
+    Parquet.dataFiles(fs, rootPath).map(_.getPath.toString).sorted
   }
 
   /** Read the pinned snapshot; `basePath` recovers the (log_date,
@@ -261,23 +246,14 @@ object LogStore {
       .reduce(_.unionByName(_))
   }
 
-  /** Compaction: streaming micro-batches append one file per batch per
-    * partition — at 100 TB the small-files problem makes listing and
-    * scanning the store the bottleneck, so a periodic compactor
-    * rewrites each (log_date, source) partition to `filesPerPartition`
-    * files.
-    *
-    * Write-then-swap, never overwrite-in-place: the compacted copy is
-    * fully written (and committed) to a sibling temp directory while the
-    * live store stays readable; only then is each log_date partition
-    * swapped in with a directory rename (atomic on HDFS-like
-    * filesystems). A job that crashes mid-WRITE leaves the live store
-    * untouched; a crash mid-SWAP leaves every partition either fully old
-    * or fully compacted — no partition ever holds mixed files, which an
-    * in-place dynamic overwrite (reading the directory it rewrites,
-    * recovery dependent on executor-local checkpoint blocks) cannot
-    * guarantee. A production job compacts only closed (past-date)
-    * partitions, which never receive concurrent appends.
+  /** A8 — compaction: streaming micro-batches append one file per
+    * batch per partition — at 100 TB the small-files problem makes
+    * listing and scanning the store the bottleneck, so a periodic
+    * compactor rewrites each (log_date, source) partition to
+    * `filesPerPartition` files, through `rewritePartitions` (never
+    * overwrite-in-place, which reads the directory it rewrites). A
+    * production job compacts only closed (past-date) partitions, which
+    * never receive concurrent appends.
     */
   def compact(spark: SparkSession, root: String, filesPerPartition: Int = 1): Unit = {
     recoverParkedPartitions(spark, root)
@@ -285,23 +261,38 @@ object LogStore {
     // doubles as the small-file compaction, so an epoched store pays
     // the scan once, not twice)
     if (foldEpochs(spark, root, filesPerPartition)) return
-    val tmp = root.stripSuffix("/") + ".compact-tmp"
-    Parquet.read(spark, root)
-      .repartition(filesPerPartition, col("log_date"), col("source"))
-      .write.mode("overwrite")
-      .partitionBy("log_date", "source")
-      .parquet(tmp)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(tmpPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("log_date="))
-      .foreach { s =>
-        val dest = new org.apache.hadoop.fs.Path(rootPath, s.getPath.getName)
-        swapPartition(fs, s.getPath, dest)
-      }
-    fs.delete(tmpPath, true)
+    rewritePartitions(spark, root, "compact", Parquet.read(spark, root)
+      .repartition(filesPerPartition, col("log_date"), col("source")))(identity)
   }
+
+  /** The one partition rewrite of the store's maintenance operations:
+    * write `df` partitioned by (log_date, source) to the sibling
+    * `<root>.<op>-tmp` while the live store stays readable, then
+    * `swapIn` each `log_date=` dir that `replace` names, given the names
+    * staged, and delete the tmp. A named dir with nothing staged is
+    * removed; every staged dir lands before any removal, so a crash
+    * never drops rows the rewrite moved to another date. A crash
+    * mid-write leaves the store untouched; mid-swap, each partition is
+    * wholly old or wholly new, and the next run's
+    * `recoverParkedPartitions` finishes the interrupted swap.
+    */
+  private def rewritePartitions(spark: SparkSession, root: String, op: String, df: DataFrame)
+                               (replace: Set[String] => Set[String]): Unit = {
+    val rootPath = new Path(root)
+    val tmp = new Path(root.stripSuffix("/") + s".$op-tmp")
+    df.write.mode("overwrite").partitionBy("log_date", "source").parquet(tmp.toString)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = dateDirs(fs, tmp).toSet
+    replace(staged).toSeq.sortBy(n => (!staged(n), n))
+      .foreach(n => swapIn(fs, new Path(tmp, n), new Path(rootPath, n)))
+    fs.delete(tmp, true)
+  }
+
+  /** Names of the `log_date=` partition dirs directly under `dir`. */
+  private def dateDirs(fs: FileSystem, dir: Path): Seq[String] =
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("log_date="))
+      .map(_.getPath.getName)
 
   /** A28 — Z-order clustered rewrite (the lakehouse multi-dimension
     * layout device: interleave the bits of two normalized sort keys so
@@ -312,7 +303,7 @@ object LogStore {
     * from Morton 1966). Within each (log_date, source) partition the
     * rewrite range-partitions rows by the 32-bit Morton code of the
     * two columns (16 bits each, min/max-normalized) and swaps files in
-    * via the same crash-safe parking as `compact`.
+    * through `rewritePartitions`.
     *
     * The Morton code is one folded codegen'd bit expression — no UDF;
     * normalization bounds come from one bounded stats row. `fileSpans`
@@ -348,24 +339,10 @@ object LogStore {
     val nParts = math.max(
       df.select(col("log_date"), col("source")).distinct().count().toInt, 1) *
       filesPerPartition
-    val tmp = root.stripSuffix("/") + ".zorder-tmp"
-    df.withColumn("__z", z)
+    rewritePartitions(spark, root, "zorder", df.withColumn("__z", z)
       .repartitionByRange(nParts, col("log_date"), col("source"), col("__z"))
       .sortWithinPartitions(col("log_date"), col("source"), col("__z"))
-      .drop("__z")
-      .write.mode("overwrite")
-      .partitionBy("log_date", "source")
-      .parquet(tmp)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(tmpPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("log_date="))
-      .foreach { s =>
-        val dest = new org.apache.hadoop.fs.Path(rootPath, s.getPath.getName)
-        swapPartition(fs, s.getPath, dest)
-      }
-    fs.delete(tmpPath, true)
+      .drop("__z"))(identity)
   }
 
   /** Per-file min/max of two columns — the parquet footer stats a
@@ -384,12 +361,12 @@ object LogStore {
     * source=…`, the idempotent streaming sink's unit of replacement)
     * into the plain date layout the batch store uses. The fold CHANGES
     * the directory scheme, so the per-partition swap doesn't apply; the
-    * whole root is replaced atomically instead: rewrite to a sibling
-    * tmp, park the old root (`.pre-fold`), move the rewrite in, drop
-    * the parking. A crash between the two renames leaves the complete
-    * store parked — the next fold (or compact) restores it before doing
-    * anything else; at no point can a reader see a HALF-folded mix of
-    * epoch and date dirs. No-op (false) on stores with no epoch dirs.
+    * rewrite lands in a sibling tmp and `swapIn` replaces the whole
+    * root with it. A crash mid-swap leaves the complete store parked
+    * at `<root>.old`, which the next fold (or compact) restores before
+    * doing anything else; at no point can a reader see a HALF-folded
+    * mix of epoch and date dirs. No-op (false) on stores with no epoch
+    * dirs.
     *
     * Fold + resumed ingest (the lifecycle hazard): a fold flattens the
     * scheme, but the stream's checkpoint lives on — a later micro-batch
@@ -399,7 +376,7 @@ object LogStore {
     * absorbed. The contract that closes both holes:
     *  - the fold records the highest non-negative batch id it absorbed
     *    in a `_graft_fold_hwm` sidecar written INTO the rewrite tmp, so
-    *    the whole-root rename publishes data + watermark atomically;
+    *    the whole-root swap publishes data + watermark atomically;
     *  - `idempotentBatchWrite` consults it: a replayed batch at or
     *    below the watermark is a no-op (its rows are the folded ones),
     *    and a NEW batch first re-homes the flat `log_date=` dirs under
@@ -414,12 +391,9 @@ object LogStore {
     */
   def foldEpochs(spark: SparkSession, root: String,
                  filesPerPartition: Int = 1): Boolean = {
-    def fail(msg: String) = throw new java.io.IOException(s"foldEpochs: $msg")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parked = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + ".pre-fold")
-    if (!fs.exists(rootPath) && fs.exists(parked) && !fs.rename(parked, rootPath))
-      fail(s"cannot restore parked $parked to $rootPath")
+    restoreParked(fs, rootPath)
     if (!fs.exists(rootPath)) return false
     // crash repair: a half-re-homed root (some flat log_date= dirs, some
     // already under epoch=-1) is unreadable — finish the renames first
@@ -435,27 +409,20 @@ object LogStore {
       case Seq() => None
       case ids   => Some(ids.max)
     }
-    val tmp = root.stripSuffix("/") + ".fold-tmp"
+    val tmp = new Path(root.stripSuffix("/") + ".fold-tmp")
     Parquet.read(spark, root).drop("epoch")
       .repartition(filesPerPartition, col("log_date"), col("source"))
       .write.mode("overwrite")
       .partitionBy("log_date", "source")
-      .parquet(tmp)
+      .parquet(tmp.toString)
     // the watermark rides the tmp dir so it lands in the same rename as
     // the data it describes — no window where folded data is live but
     // the replay guard is missing
     newHwm.foreach { h =>
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, foldHwmFileName), true)
+      val out = fs.create(new Path(tmp, foldHwmFileName), true)
       try out.write(h.toString.getBytes("UTF-8")) finally out.close()
     }
-    fs.delete(parked, true) // stale parking from a crash after both renames
-    if (!fs.rename(rootPath, parked)) fail(s"cannot park $rootPath")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), rootPath)) {
-      fs.rename(parked, rootPath) // put the store back, then abort
-      fail(s"cannot move $tmp into $rootPath")
-    }
-    fs.delete(parked, true)
+    swapIn(fs, tmp, rootPath)
     true
   }
 
@@ -550,15 +517,13 @@ object LogStore {
   /** A24 — `_delete_by_query` (predicate-driven deletion: the GDPR /
     * bad-batch surgery every log fleet eventually runs — retention
     * expiry (A9) drops whole date partitions, this drops ROWS matching
-    * an arbitrary predicate). Same write-then-swap discipline as
-    * compaction: only partitions that actually CONTAIN matches are
-    * rewritten (the delete predicate prunes the probe), the rewrite
-    * lands in a sibling temp dir while the store stays readable, then
-    * swapped in per-partition — a crash mid-write leaves the store
-    * untouched, mid-swap leaves each partition wholly old or wholly
-    * new. Partitions without matches are never touched, so cost
-    * scales with affected data, not store size. Returns the count of
-    * deleted rows (the `_delete_by_query` response's `deleted`).
+    * an arbitrary predicate). Only partitions that actually CONTAIN
+    * matches are rewritten, through `rewritePartitions` (the delete
+    * predicate prunes the probe); a partition every row of which
+    * matched is removed. Partitions without matches are never touched,
+    * so cost scales with affected data, not store size. Returns the
+    * count of deleted rows (the `_delete_by_query` response's
+    * `deleted`).
     */
   def deleteByQuery(spark: SparkSession, root: String,
                     predicate: org.apache.spark.sql.Column): Long = {
@@ -575,86 +540,65 @@ object LogStore {
     if (affected.isEmpty) return 0L
     val affectedCol = col("log_date").cast("string").isin(affected: _*)
     val deleted = all.filter(p && affectedCol).count()
-    val tmp = root.stripSuffix("/") + ".delete-tmp"
-    all.filter(affectedCol && !p)
-      .write.mode("overwrite")
-      .partitionBy("log_date", "source")
-      .parquet(tmp)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.foreach { d =>
-      val name = s"log_date=$d"
-      val src = new org.apache.hadoop.fs.Path(tmpPath, name)
-      val dest = new org.apache.hadoop.fs.Path(rootPath, name)
-      swapPartition(fs, src, dest)
-    }
-    fs.delete(tmpPath, true)
+    rewritePartitions(spark, root, "delete", all.filter(affectedCol && !p))(
+      _ => affected.map(d => s"log_date=$d").toSet)
     deleted
   }
 
-  /** Crash-safe partition swap: park the old directory beside the live one
-    * (`.old`, same filesystem → atomic rename), move the new one in, delete
-    * the parked copy last. A crash after step 1 leaves the data recoverable
-    * at `dest.old`; after step 2 the partition is wholly new — at no point
-    * is the partition's only copy a half-deleted tree. A partition whose
-    * every row matched the delete predicate has no rewritten output dir:
-    * the old tree is still parked then removed, completing the delete.
-    *
-    * Every rename is checked: a false return aborts the swap (throw)
-    * BEFORE the caller deletes its tmp dir, so a failed rewrite is never
-    * reported as success. Recovery: parking left by a crashed prior swap
-    * is the partition's ONLY copy when `dest` is absent — it is restored,
-    * not deleted; parking beside a live `dest` (crash after the new dir
-    * landed) is genuinely stale and dropped.
+  /** Where `swapIn` parks the `dest` it replaces. */
+  private def parking(dest: Path): Path = new Path(dest.getParent, dest.getName + ".old")
+
+  /** Finish a swap of `dest` that a crash interrupted: a parked copy
+    * with no live `dest` is the only copy (the crash hit between
+    * parking and move-in) and is restored; a parked copy beside a live
+    * `dest` (the crash hit after the move-in) is dropped. True when a
+    * copy was restored.
     */
-  private def swapPartition(fs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path,
-                            dest: org.apache.hadoop.fs.Path): Unit = {
-    def fail(msg: String) = throw new java.io.IOException(s"swapPartition: $msg")
-    val parked = new org.apache.hadoop.fs.Path(dest.getParent, dest.getName + ".old")
-    if (fs.exists(parked)) {
-      if (!fs.exists(dest)) {
-        // prior swap crashed between parking and move-in: restore the copy
-        if (!fs.rename(parked, dest)) fail(s"cannot restore parked $parked to $dest")
-      } else fs.delete(parked, true) // stale parking beside a live dest
-    }
+  private[sources] def restoreParked(fs: FileSystem, dest: Path): Boolean = {
+    val parked = parking(dest)
+    if (!fs.exists(parked)) false
+    else if (fs.exists(dest)) { fs.delete(parked, true); false }
+    else if (fs.rename(parked, dest)) true
+    else throw new java.io.IOException(s"cannot restore parked $parked to $dest")
+  }
+
+  /** The one way a store directory is replaced: park the live `dest`
+    * beside it (`<dest>.old`, same filesystem, so an atomic rename),
+    * move `staged` in, then drop the parking. A missing `staged` dir
+    * removes `dest`. At no point is the only copy a half-deleted tree:
+    * a crash after the parking leaves it for `restoreParked`. Every
+    * rename is checked, and a failed one throws before the caller
+    * deletes its staging, so a failed rewrite never reports success.
+    */
+  private[sources] def swapIn(fs: FileSystem, staged: Path, dest: Path): Unit = {
+    def fail(msg: String) = throw new java.io.IOException(s"swapIn: $msg")
+    restoreParked(fs, dest)
+    val parked = parking(dest)
     val hadOld = fs.exists(dest)
     if (hadOld && !fs.rename(dest, parked)) fail(s"cannot park $dest at $parked")
-    if (fs.exists(src) && !fs.rename(src, dest)) {
+    if (fs.exists(staged) && !fs.rename(staged, dest)) {
       // put the old copy back so the store stays readable, then abort
-      if (hadOld) fs.rename(parked, dest)
-      fail(s"cannot move $src into $dest")
+      if (hadOld && !fs.rename(parked, dest))
+        fail(s"cannot move $staged into $dest; the old copy stays parked at $parked")
+      fail(s"cannot move $staged into $dest")
     }
     if (hadOld) fs.delete(parked, true)
   }
 
-  /** Startup/next-run recovery for crashed swaps: a `<dir>.old` parking
-    * left WITHOUT a live `<dir>` is the partition's only copy (the crash
-    * hit between parking and move-in) — restore it; parking beside a
-    * live dir is stale and dropped. Every swap-discipline entry point
-    * (compact / delete_by_query / update_by_query / upsert-compaction)
-    * runs this before reading the store, so a crashed prior run never
-    * makes data invisible to the next one. Returns restored-dir count.
+  /** Startup/next-run recovery for crashed swaps: `restoreParked` for
+    * each `<dir>.old` parking under `root`. Every rewrite entry point
+    * (compact / z-order / delete_by_query / update_by_query /
+    * upsert-compaction / the ISM tick) runs this before reading the
+    * store, so a crashed prior run never makes data invisible to the
+    * next one. Returns restored-dir count.
     */
   def recoverParkedPartitions(spark: SparkSession, root: String): Int = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootPath)) return 0
-    var restored = 0
     fs.listStatus(rootPath).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.endsWith(".old"))
-      .foreach { s =>
-        val dest = new org.apache.hadoop.fs.Path(
-          rootPath, s.getPath.getName.stripSuffix(".old"))
-        if (!fs.exists(dest)) {
-          if (!fs.rename(s.getPath, dest))
-            throw new java.io.IOException(
-              s"recoverParkedPartitions: cannot restore ${s.getPath} to $dest")
-          restored += 1
-        } else fs.delete(s.getPath, true)
-      }
-    restored
+      .count(s => restoreParked(fs, new Path(rootPath, s.getPath.getName.stripSuffix(".old"))))
   }
 
   /** A25 — `_update_by_query` (in-place predicate-driven rewrite: fix
@@ -663,8 +607,10 @@ object LogStore {
     * the partitions containing matches, in place). The transform
     * applies to the MATCHING rows only; non-matching rows of affected
     * partitions are carried unchanged; untouched partitions keep their
-    * exact files. Same write-then-swap crash discipline as A24/A8.
-    * Returns the updated-row count.
+    * exact files. The affected partitions are replaced through
+    * `rewritePartitions`, as in A24, so matched rows a transform drops
+    * are gone whether or not their partition held other rows. Returns
+    * the updated-row count.
     */
   def updateByQuery(spark: SparkSession, root: String,
                     predicate: org.apache.spark.sql.Column)
@@ -689,22 +635,9 @@ object LogStore {
     // migration is A10 reindex's job, not an in-place update's
     require(out.filter(!col("log_date").cast("string").isin(affected: _*)).isEmpty,
       "update_by_query transform must not change log_date; use reindex")
-    val tmp = root.stripSuffix("/") + ".update-tmp"
-    all.filter(affectedCol && !p)
-      .unionByName(out.select(all.columns.map(col): _*))
-      .write.mode("overwrite")
-      .partitionBy("log_date", "source")
-      .parquet(tmp)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.foreach { d =>
-      val name = s"log_date=$d"
-      val src = new org.apache.hadoop.fs.Path(tmpPath, name)
-      val dest = new org.apache.hadoop.fs.Path(rootPath, name)
-      if (fs.exists(src)) swapPartition(fs, src, dest)
-    }
-    fs.delete(tmpPath, true)
+    rewritePartitions(spark, root, "update", all.filter(affectedCol && !p)
+      .unionByName(out.select(all.columns.map(col): _*)))(
+      _ => affected.map(d => s"log_date=$d").toSet)
     updated
   }
 
@@ -745,16 +678,11 @@ object LogStore {
     require(fs.exists(src), s"follower: leader root does not exist: $srcRoot")
     val dst = new org.apache.hadoop.fs.Path(dstRoot)
     val dfs = dst.getFileSystem(conf)
-    def visible(name: String): Boolean =
-      !name.startsWith(".") && !name.startsWith("_")
-    def dataFiles(p: org.apache.hadoop.fs.Path, rel: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
-      fs.listStatus(p).toSeq.filter(s => visible(s.getPath.getName)).flatMap { s =>
-        val childRel = if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}"
-        if (s.isDirectory) dataFiles(s.getPath, childRel) else Seq(childRel -> s)
-      }
+    val srcDir = fs.makeQualified(src).toUri.getPath.stripSuffix("/") + "/"
     val leaderFiles = fs.listStatus(src).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-      .flatMap(g => dataFiles(g.getPath, g.getPath.getName))
+      .flatMap(g => Parquet.dataFiles(fs, g.getPath))
+      .map(st => st.getPath.toUri.getPath.stripPrefix(srcDir) -> st)
     val missing = leaderFiles.filter { case (rel, st) =>
       val t = new org.apache.hadoop.fs.Path(dst, rel)
       !(dfs.exists(t) && dfs.getFileStatus(t).getLen == st.getLen)
@@ -973,19 +901,12 @@ object LogStore {
     val hadoopPath = new org.apache.hadoop.fs.Path(root)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hadoopPath)) return ("red", Seq("store root missing"))
-    // a hidden dir hides what is under it too (an epoch write's staging dir)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).iterator
-        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
-        .map(f => if (f.isDirectory) dataFiles(f.getPath) else 1).sum
-    val parts = fs.listStatus(hadoopPath).toSeq.filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("log_date="))
-    val empty = parts.filter(dataFiles(_) == 0).map(_.getName)
+    val empty = dateDirs(fs, hadoopPath)
+      .filter(p => Parquet.dataFiles(fs, new Path(hadoopPath, p)).isEmpty)
     val issues = empty.map(p => s"empty partition $p") ++
       (if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS")))
         Seq("no _SUCCESS commit marker") else Nil)
-    val total = dataFiles(hadoopPath)
-    if (total == 0) ("red", Seq("no data files"))
+    if (Parquet.dataFiles(fs, hadoopPath).isEmpty) ("red", Seq("no data files"))
     else if (issues.nonEmpty) ("yellow", issues)
     else ("green", Nil)
   }
@@ -1029,24 +950,18 @@ object LogStore {
     */
   def indexStats(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val hadoopPath = new org.apache.hadoop.fs.Path(root)
+    val hadoopPath = new Path(root)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val perFile = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
-    if (fs.exists(hadoopPath)) {
-      val it = fs.listFiles(hadoopPath, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val rel = f.getPath.toString.stripPrefix(hadoopPath.toString).stripPrefix("/")
-        val segs = rel.split('/').toSeq
-        val date = segs.collectFirst { case s if s.startsWith("log_date=") => s.stripPrefix("log_date=") }
-        val src = segs.collectFirst { case s if s.startsWith("source=") => s.stripPrefix("source=") }
-        if (date.isDefined && src.isDefined && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          perFile += ((date.get, src.get, f.getLen))
-      }
+    // a data file's parent dirs name its partition: log_date=…/source=…/
+    val perFile = Parquet.dataFiles(fs, hadoopPath).flatMap { f =>
+      val src = f.getPath.getParent
+      val date = src.getParent
+      if (src.getName.startsWith("source=") && date.getName.startsWith("log_date="))
+        Some((date.getName.stripPrefix("log_date="), src.getName.stripPrefix("source="), f.getLen))
+      else None
     }
     import spark.implicits._
-    val sizes = perFile.toSeq.toDF("log_date", "source", "bytes")
+    val sizes = perFile.toDF("log_date", "source", "bytes")
       .groupBy(col("log_date"), col("source"))
       .agg(count(lit(1)).as("n_files"), sum(col("bytes")).as("store_bytes"))
     val counts = Parquet.read(spark, root)
@@ -1119,7 +1034,7 @@ object LogStore {
     * id to its highest-seq version and drops tombstones (ONE max_by
     * aggregate keyed on doc_id — map-side combined, the exchange
     * carries live ids); `compactUpserts` folds the history physically
-    * (same crash-safe write-then-swap as A8), after which reads carry
+    * (through `rewritePartitions`), after which reads carry
     * no merge debt. `seq` is caller-supplied and monotone per id (the
     * OpenSearch `_seq_no` contract) so replay/redelivery is idempotent:
     * re-writing an old seq can never resurrect an old version.
@@ -1147,39 +1062,20 @@ object LogStore {
       .select(col("doc_id") +: col("seq") +: payload.map(p => col(s"v.$p").as(p)): _*)
   }
 
-  /** Fold the upsert history physically: rewrite each partition to its
-    * resolved latest versions (tombstoned ids disappear), with the A8
-    * swap discipline. NOTE: resolution is global (an id's versions may
-    * span log_date partitions when its ts changed) — the fold keeps
-    * each surviving id in its LATEST version's partition.
+  /** Fold the upsert history physically: rewrite every partition to
+    * its resolved latest versions (tombstoned ids disappear) through
+    * `rewritePartitions`; a partition that resolved to nothing (every
+    * id moved or tombstoned) is removed. NOTE: resolution is global (an
+    * id's versions may span log_date partitions when its ts changed) —
+    * the fold keeps each surviving id in its LATEST version's partition.
     */
   def compactUpserts(spark: SparkSession, root: String): Unit = {
-    val tmp = root.stripSuffix("/") + ".upsert-tmp"
     recoverParkedPartitions(spark, root)
-    readLatest(spark, root)
+    val rootPath = new Path(root)
+    val live = dateDirs(rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration), rootPath)
+    rewritePartitions(spark, root, "upsert", readLatest(spark, root)
       .withColumn("deleted", lit(false))
-      .withColumn("log_date", to_date(col("ts")))
-      .write.mode("overwrite")
-      .partitionBy("log_date", "source")
-      .parquet(tmp)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // swap in rewritten partitions, then drop partitions that resolved
-    // to nothing (every id moved or tombstoned)
-    val newParts = fs.listStatus(tmpPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("log_date="))
-      .map(_.getPath.getName)
-    fs.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("log_date="))
-      .map(_.getPath.getName)
-      .filterNot(newParts.contains)
-      .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(rootPath, n), true))
-    newParts.foreach { name =>
-      swapPartition(fs, new org.apache.hadoop.fs.Path(tmpPath, name),
-        new org.apache.hadoop.fs.Path(rootPath, name))
-    }
-    fs.delete(tmpPath, true)
+      .withColumn("log_date", to_date(col("ts"))))(_ ++ live)
   }
 
   // ---- A26: Bloom-filter partition-skipping index ---------------------

@@ -28,7 +28,8 @@ import org.apache.spark.sql.types.StructType
   * takes the head). Names Spark's listing hides — a leading `_` without
   * `=`, a leading `.`, a `._COPYING_` suffix — are skipped at every
   * level, so `_SUCCESS`, `_COMPLETE`, `_temporary/` and `.crc` files
-  * never count. Spark would also honour summary files nested below the
+  * never count; `dataFiles` applies the same rule to a whole store
+  * listing. Spark would also honour summary files nested below the
   * path; graft writes none (Parquet's summary level stays NONE).
   *
   * Everything else falls back to `spark.read.parquet(path)`, so errors
@@ -62,6 +63,19 @@ object Parquet {
           new ParquetToSparkSchemaConverter(state.conf))
       }
     } catch { case NonFatal(_) => None }
+
+  /** The files Spark's listing of `root` reads: every file below it
+    * with no hidden name on the way down, so part files an in-flight
+    * write stages under `_temporary/…` or `_staging-epoch-N-…/` and the
+    * `.crc` and `_SUCCESS` sidecars never count. Empty when `root` is
+    * missing.
+    */
+  def dataFiles(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    def walk(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    if (fs.exists(root)) walk(root) else Nil
+  }
 
   // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName)
   private def hidden(name: String): Boolean =

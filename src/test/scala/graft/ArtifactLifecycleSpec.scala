@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -62,29 +60,14 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
   test("artifact markers and listing digests live only in Scratch.scala") {
     // a string literal naming a marker file
     val marker = "\"[^\"\\n]*_(?:COMPLETE|SUCCESS)[^\"\\n]*\"".r
-    // member-level defs (two-space indent): a nested helper is part of
-    // its enclosing member
-    val defName = """(?m)^  (?! )[^\n]*?\bdef\s+(\w+)""".r
     // the A18 health check reports a store's own commit marker; it
     // builds no artifact
     val allowed = Set("LogStore.scala:storeHealth")
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"$root not found")
-    val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val hits = files.filter(_.getFileName.toString != "Scratch.scala").flatMap { p: Path =>
-      val src = new String(Files.readAllBytes(p), "UTF-8")
-      val defs = defName.findAllMatchIn(src).toSeq
-      def enclosing(at: Int) = defs.takeWhile(_.start < at).lastOption
-      def label(at: Int) = s"${p.getFileName}:${enclosing(at).fold("?")(_.group(1))}"
+    val hits = MainSources.all.filter(_.file != "Scratch.scala").flatMap { src =>
       // a listing digest: MessageDigest and listStatus in one def body
-      val digests = "MessageDigest".r.findAllMatchIn(src).map(_.start).filter { at =>
-        val from = enclosing(at).fold(0)(_.start)
-        val until = defs.find(_.start > at).fold(src.length)(_.start)
-        src.substring(from, until).contains("listStatus")
-      }
-      (marker.findAllMatchIn(src).map(_.start) ++ digests).map(label).toSeq
+      val digests = "MessageDigest".r.findAllMatchIn(src.text).map(_.start)
+        .filter(at => src.member(at).contains("listStatus"))
+      src.hits(marker) ++ digests.map(src.label)
     }
     assert(hits.filterNot(allowed).isEmpty, s"use Scratch.ensure: ${hits.filterNot(allowed)}")
     assert(allowed.subsetOf(hits.toSet), s"stale allow-list: ${allowed -- hits}")

@@ -313,6 +313,31 @@ class LogStoreSpec extends AnyFunSuite {
     assert(r2.forall(_._3 == "noop"), s"got $r2")
   }
 
+  test("ISM policy tick restores a crashed swap's parking before it walks the dates (A15)") {
+    import graft.sources.Ism
+    val root = Files.createTempDirectory("graft-ism-park").toString + "/logs"
+    def day(d: String, ip: String) =
+      Seq((ip, java.sql.Timestamp.valueOf(s"$d 12:00:00"), 200L))
+        .toDF("ip", "ts", "status").withColumn("source", lit("ec2"))
+    Seq("2024-01-07", "2024-01-09").foreach { d =>
+      LogStore.write(day(d, "1.1.1.1"), root)
+      LogStore.write(day(d, "2.2.2.2"), root)
+    }
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(n: String) = new org.apache.hadoop.fs.Path(n)
+    // a swap that crashed between parking and move-in
+    assert(fs.rename(p(s"$root/log_date=2024-01-07"), p(s"$root/log_date=2024-01-07.old")))
+    val r = Ism.applyPolicy(spark, root, root + "-snap",
+      Ism.Policy(compactAfterDays = 1, snapshotAfterDays = 3, deleteAfterDays = 7),
+      asOf = "2024-01-09").as[(String, String, String)].collect().toSeq
+    assert(r == Seq(("2024-01-07", "warm", "compacted"), ("2024-01-09", "hot", "noop")), s"got $r")
+    assert(spark.read.parquet(root)
+      .filter(col("log_date").cast("string") === "2024-01-07").count() == 2)
+    assert(!fs.exists(p(s"$root/log_date=2024-01-07.old")))
+    assert(!fs.exists(p(s"$root.ism-tmp")))
+  }
+
   test("snapshot/restore round-trips partitions via the manifest; alias swap retargets readers") {
     val base = Files.createTempDirectory("graft-snap").toString
     val v1 = s"$base/logs"; val snap = s"$base/snap"; val v2 = s"$base/logs-restored"
@@ -440,16 +465,25 @@ class LogStoreSpec extends AnyFunSuite {
       .toDF("ip", "ts", "status")
       .withColumn("source", lit("ec2"))
     LogStore.write(rows, s"$base/logs")
+    // byte totals agree with the filesystem's own du of the committed files
+    val committed = java.nio.file.Files.walk(Paths.get(s"$base/logs")).iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet") && !p.getFileName.toString.startsWith("_"))
+      .toList
+    val fsBytes = committed.map(p => java.nio.file.Files.size(p)).sum
+    // part files that are not committed: a Spark write's task output
+    // and an epoch write's staging dir, both below a partition path
+    Seq("_temporary/0/_temporary/attempt_0/log_date=2024-06-01/source=ec2",
+        "_staging-epoch-7-w/log_date=2024-06-01/source=ec2").foreach { d =>
+      val dir = Files.createDirectories(Paths.get(s"$base/logs/$d"))
+      Files.copy(committed.head, dir.resolve("part-00000-x.c000.snappy.parquet"))
+    }
     val stats = LogStore.indexStats(spark, s"$base/logs")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     // two dates x one source; doc counts partition 6 rows 3/3
     assert(stats.map(s => (s._1, s._2, s._3)).toSet ==
       Set(("2024-06-01", "ec2", 3L), ("2024-06-02", "ec2", 3L)))
     assert(stats.forall(s => s._4 > 0 && s._5 > 0), s"files/bytes must be positive: ${stats.toSeq}")
-    // byte totals agree with the filesystem's own du of the partition dirs
-    val fsBytes = java.nio.file.Files.walk(Paths.get(s"$base/logs")).iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") && !p.getFileName.toString.startsWith("_"))
-      .map(p => java.nio.file.Files.size(p)).sum
+    assert(stats.map(_._4).sum == committed.size, s"uncommitted files counted: ${stats.toSeq}")
     assert(stats.map(_._5).sum == fsBytes)
   }
 
@@ -686,6 +720,14 @@ class LogStoreSpec extends AnyFunSuite {
         _.withColumn("log_date", lit("2024-02-01").cast("date")))
     }
     assert(spark.read.parquet(root).count() == 150)
+    // a transform that drops the matched rows drops them in an
+    // all-matching partition (day 3, removed) as in a mixed one (day 2)
+    LogStore.write(batch(2, 404L, 5).unionAll(batch(3, 404L, 10)), root)
+    assert(LogStore.updateByQuery(spark, root, col("status") === 404L)(
+      _.filter(lit(false))) == 15L)
+    val dropped = spark.read.parquet(root)
+    assert(dropped.count() == 150 && dropped.filter(col("status") === 404L).count() == 0)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/log_date=2024-01-03")))
   }
 
   test("json-lines and csv readers honor the explicit schema") {
@@ -816,7 +858,7 @@ class LogStoreSpec extends AnyFunSuite {
     assert(spark.read.parquet(root).count() == 50)
   }
 
-  test("epoch fold: crash between the whole-root renames is recovered from the .pre-fold parking") {
+  test("epoch fold: crash between the whole-root renames is recovered from the .old parking") {
     val base = Files.createTempDirectory("graft-fold").toString
     val root = s"$base/logs"
     def batch(n: Int) = spark.range(n).select(
@@ -832,12 +874,12 @@ class LogStoreSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(root),
-      new org.apache.hadoop.fs.Path(s"$root.pre-fold")))
+      new org.apache.hadoop.fs.Path(s"$root.old")))
     // next fold restores the parking FIRST, then folds to the date layout
     assert(LogStore.foldEpochs(spark, root))
     val folded = spark.read.parquet(root)
     assert(folded.count() == 50 && !folded.columns.contains("epoch"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root.pre-fold")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root.old")))
     // idempotent: a date-layout store folds as a no-op
     assert(!LogStore.foldEpochs(spark, root))
   }
