@@ -69,12 +69,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private def ms3(v: Double): Double = math.round(v * 1000) / 1000.0
 
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-  }
-
   private def hygiene(spark: SparkSession): Unit = {
     // between queries: one query's cached plans, temp views, leaked
     // persists, and garbage must not be charged to the next
@@ -86,35 +80,22 @@ object Bench {
     System.gc()
   }
 
-  private def timeOnce(spark: SparkSession, sfDir: String,
-                       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[Throwable, (Double, Long)] = {
-    val g0 = gcMs()
-    val t0 = System.nanoTime()
-    try {
-      fn(spark, sfDir).count()
-      Right(((System.nanoTime() - t0) / 1e9, gcMs() - g0))
-    } catch { case t: Throwable => Left(t) }
-  }
-
-  /** Median rep (wall seconds, gc ms) of `reps` timings, or the last
-    * rep's exception (`Throwable.toString`) when every rep threw.
+  /** The median rep's record (by wall time) of `reps` timings, or the
+    * last rep's exception (`Throwable.toString`) when every rep threw.
     */
   private def measure(spark: SparkSession, sfDir: String,
                       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                      reps: Int): Either[String, (Double, Long)] = {
-    val runs = (1 to reps).map(_ => timeOnce(spark, sfDir, fn))
-    val times = runs.collect { case Right(t) => t }.sortBy(_._1)
+                      reps: Int): Either[String, QueryMetrics.Record] = {
+    val runs = (1 to reps).map { _ =>
+      val (out, rec) = QueryMetrics.measure(spark)(fn(spark, sfDir).count())
+      out.map(_ => rec)
+    }
+    val times = runs.collect { case Right(t) => t }.sortBy(_.wallSeconds)
     if (times.nonEmpty) Right(times(times.length / 2))
     else Left(runs.collect { case Left(e) => e.toString }.last)
   }
 
-  /** One query's result: median wall seconds (None when every rep
-    * threw, the cause then in `error`) and gc ms during the median rep.
-    */
-  private case class Result(name: String, wall: Option[Double], gc: Long,
-                            error: Option[String] = None)
-
-  /** One `Result` per query.
+  /** Each query's `measure`.
     *
     * Execution order is the md5 of the query name, NOT alphabetical
     * (round 12): three driver batteries in a row showed the same false-
@@ -127,13 +108,10 @@ object Bench {
     */
   private def runBattery(spark: SparkSession, sfDir: String,
                          battery: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-                         reps: Int): Seq[Result] =
+                         reps: Int): Seq[(String, Either[String, QueryMetrics.Record])] =
     battery.sortBy(b => graft.sources.Scratch.digest(b._1)).map { case (name, fn) =>
       hygiene(spark)
-      measure(spark, sfDir, fn, reps) match {
-        case Right((w, g)) => Result(name, Some(w), g)
-        case Left(err) => Result(name, None, -1L, error = Some(err))
-      }
+      name -> measure(spark, sfDir, fn, reps)
     }
 
   def main(args: Array[String]): Unit = {
@@ -164,29 +142,31 @@ object Bench {
       try graft.sources.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    val ordered = runBattery(spark, sfDir, battery, reps).sortBy(_.name)
+    val ordered = runBattery(spark, sfDir, battery, reps).sortBy(_._1)
     spark.stop()
-    def ms(r: Result): Long = r.wall.map(t => math.round(t * 1000)).getOrElse(-1L)
+    def ms(r: Either[String, QueryMetrics.Record]): Long =
+      r.fold(_ => -1L, m => math.round(m.wallSeconds * 1000))
 
-    val qv = ordered.map(ms).mkString("[", ",", "]")
-    val total = ms3(ordered.map(ms).filter(_ >= 0).sum / 1000.0)
+    val qv = ordered.map(q => ms(q._2)).mkString("[", ",", "]")
+    val total = ms3(ordered.map(q => ms(q._2)).filter(_ >= 0).sum / 1000.0)
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","nq":${ordered.length},"qv":$qv,"sf":$sfNum}"""
     // Lossless copy on disk: FULL query names, seconds at 3 decimals,
     // plus the per-query GC ms of the median rep (the self-diagnosis
-    // column: wall ≫ gc → the operator; wall ≈ gc → battery debt).
+    // column: wall ≫ gc → the operator; wall ≈ gc → battery debt) and
+    // the Spark jobs it ran; -1 where every rep threw.
     try {
-      val fullQs = ordered.map { r =>
-        "\"" + r.name + "\":" + (if (ms(r) < 0) "-1" else ms3(ms(r) / 1000.0).toString)
-      }.mkString("{", ",", "}")
-      val gcQs = ordered.map(r => "\"" + r.name + "\":" + r.gc).mkString("{", ",", "}")
+      def perQuery(value: Either[String, QueryMetrics.Record] => Option[String]): String =
+        ordered.flatMap { case (n, r) => value(r).map("\"" + n + "\":" + _) }.mkString("{", ",", "}")
+      val fullQs = perQuery(r => Some(if (ms(r) < 0) "-1" else ms3(ms(r) / 1000.0).toString))
+      val gcQs = perQuery(r => Some(r.fold(_ => -1L, _.gcMs).toString))
+      val jobQs = perQuery(r => Some(r.fold(_ => -1, _.jobs.size).toString))
       // errors = the last rep's exception of every query reporting -1
-      val errorQs = ordered.flatMap(r => r.error.map(e => "\"" + r.name + "\":" + Verify.jsonStr(e)))
-        .mkString("{", ",", "}")
+      val errorQs = perQuery(_.left.toOption.map(Verify.jsonStr))
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"errors":$errorQs,"sf":$sfNum}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"jobs":$jobQs,"errors":$errorQs,"sf":$sfNum}""")
       finally w.close()
     } catch { case _: Throwable => () }
     println(line)

@@ -23,15 +23,6 @@ import java.nio.file.{Files, Paths}
   */
 object Explain {
 
-  private final class BuildListener extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      records.addAndGet(s.stageInfo.taskMetrics.inputMetrics.recordsRead)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("/tmp/explains.txt")
@@ -50,29 +41,19 @@ object Explain {
       // construction-time accounting: jobs fired while fn builds the
       // frame are exactly the checkpoint/park/collect materializations
       // the compiled plan no longer shows
-      val bl = new BuildListener
-      spark.sparkContext.addSparkListener(bl)
-      val plan =
-        try {
-          val df = fn(spark, sfDir)
-          org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        }
-        catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
-        finally {
-          scala.util.Try(
-            org.apache.spark.GraftSparkBridge.waitListenerBus(spark.sparkContext))
-          spark.sparkContext.removeSparkListener(bl)
-        }
+      val (explained, build) = QueryMetrics.measure(spark) {
+        fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
+      val plan = explained.fold(e => s"EXPLAIN FAILED: ${e.getMessage}", identity)
       sb.append(plan)
       if (i > 0) audit.append(",\n")
       audit.append(s""" "$name": {"cartesian": ${count(plan, "CartesianProduct")},""" +
         s""" "bnlj": ${count(plan, "BroadcastNestedLoopJoin")},""" +
         s""" "exchanges": ${count(plan, "Exchange")},""" +
         s""" "scans": ${count(plan, "Scan parquet")},""" +
-        s""" "build_jobs": ${bl.jobs.get()},""" +
-        s""" "build_records": ${bl.records.get()},""" +
+        s""" "build_jobs": ${build.jobs.size},""" +
+        s""" "build_records": ${build.inputRecords},""" +
         s""" "failed": ${plan.startsWith("EXPLAIN FAILED")}}""")
     }
     Files.writeString(Paths.get(outFile), sb.toString)

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   *     source in a sibling tmp and swapped in by `LogStore.swapIn`, the
   *     swap every store rewrite uses; a tick first restores what a
   *     crashed swap left parked (`LogStore.recoverParkedPartitions`);
-  *   - cold: copied into the snapshot dir once (manifest-tracked,
-  *     A11's restore contract) — the live partition stays searchable;
+  *   - cold: copied into the snapshot dir once, staged and swapped in
+  *     whole (manifest-tracked, A11's restore contract) — the live
+  *     partition stays searchable;
   *   - delete: the partition directory is dropped (A9) — its snapshot,
   *     if the cold phase took one, is the long-retention copy.
   *
@@ -68,8 +69,12 @@ object Ism {
         val dst = new org.apache.hadoop.fs.Path(snapDir, name)
         if (fs.exists(dst)) (date, "cold", "noop")
         else {
-          fs.mkdirs(new org.apache.hadoop.fs.Path(snapDir))
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, dst, false, conf)
+          // publish the copy whole: a tick killed mid-copy must leave no
+          // `log_date=` dir that a later tick takes as snapshotted
+          val staged = new org.apache.hadoop.fs.Path(snapDir, s".ism-tmp-$name")
+          fs.delete(staged, true)
+          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, staged, false, conf)
+          LogStore.swapIn(fs, staged, dst)
           (date, "cold", "snapshotted")
         }
       } else if (age > policy.compactAfterDays) {

@@ -952,12 +952,15 @@ object LogStore {
     import org.apache.spark.sql.functions._
     val hadoopPath = new Path(root)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a data file's parent dirs name its partition: log_date=…/source=…/
+    // a data file's parent dirs name its partition: log_date=…/source=…/,
+    // with the values escaped as Spark writes them (`eks:api` → `eks%3Aapi`)
+    def value(dir: Path, key: String) = org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.unescapePathName(dir.getName.stripPrefix(s"$key="))
     val perFile = Parquet.dataFiles(fs, hadoopPath).flatMap { f =>
       val src = f.getPath.getParent
       val date = src.getParent
       if (src.getName.startsWith("source=") && date.getName.startsWith("log_date="))
-        Some((date.getName.stripPrefix("log_date="), src.getName.stripPrefix("source="), f.getLen))
+        Some((value(date, "log_date"), value(src, "source"), f.getLen))
       else None
     }
     import spark.implicits._

@@ -1,12 +1,9 @@
 package org.apache.spark
 
-/** Bridge into `private[spark]` scheduler internals for the plan-audit
-  * harness (the GraftColumnBridge pattern): graft.Explain measures the
-  * jobs a query runs while it is being CONSTRUCTED — the window where
-  * localCheckpoint / park-to-temp materializations execute and where a
-  * data-sized subtree can hide from the compiled-plan scan count — and
-  * listener events are asynchronous, so the audit must drain the bus
-  * before reading its counters.
+/** Bridge into `private[spark]` scheduler internals (the
+  * GraftColumnBridge pattern) for `graft.QueryMetrics.measure`, the one
+  * metrics collector: listener events are asynchronous, so a window's
+  * record is read only after the bus is drained.
   */
 object GraftSparkBridge {
   def waitListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

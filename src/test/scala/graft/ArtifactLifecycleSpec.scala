@@ -69,7 +69,6 @@ class ArtifactLifecycleSpec extends AnyFunSuite {
         .filter(at => src.member(at).contains("listStatus"))
       src.hits(marker) ++ digests.map(src.label)
     }
-    assert(hits.filterNot(allowed).isEmpty, s"use Scratch.ensure: ${hits.filterNot(allowed)}")
-    assert(allowed.subsetOf(hits.toSet), s"stale allow-list: ${allowed -- hits}")
+    MainSources.assertOnly(hits, allowed, "Scratch.ensure")
   }
 }

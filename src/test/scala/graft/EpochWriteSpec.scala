@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -11,7 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -134,18 +133,10 @@ class EpochWriteSpec extends AnyFunSuite {
     val good =
       """46.99.153.40 - - [29/Jul/2021:15:32:33 +0000] "GET /index.html HTTP/1.1" 200 173 "-" "curl/7.68.0""""
     Files.writeString(Paths.get(s"$in/ec2/a.log"), s"$good\n### not a log line ###\n$good\n")
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try LogPipeline.startIngest(spark, in, out, tmp("ingest-ckpt")).awaitTermination()
-    finally {
-      org.apache.spark.GraftSparkBridge.waitListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get == 1)
+    val (ingested, rec) = QueryMetrics.measure(spark)(
+      LogPipeline.startIngest(spark, in, out, tmp("ingest-ckpt")).awaitTermination())
+    ingested.toTry.get
+    assert(rec.jobs.size == 1)
     assert(spark.read.parquet(s"$out/logs").count() == 2)
     assert(spark.read.parquet(s"$out/dlq").count() == 1)
   }

@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.LogPipeline
@@ -36,19 +32,9 @@ class ListingJobSpec extends AnyFunSuite {
 
   /** Descriptions of the jobs `body` starts, from any thread. */
   private def jobDescriptions(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try body finally {
-      org.apache.spark.GraftSparkBridge.waitListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
+    val (out, rec) = QueryMetrics.measure(spark)(body)
+    out.toTry.get
+    rec.jobs.map(_.description)
   }
 
   private def listingJobs(descriptions: Seq[String]): Seq[String] =

@@ -338,6 +338,32 @@ class LogStoreSpec extends AnyFunSuite {
     assert(!fs.exists(p(s"$root.ism-tmp")))
   }
 
+  test("ISM cold tick killed mid-copy leaves no partial snapshot; the next tick takes it whole (A15)") {
+    import graft.sources.Ism
+    val root = Files.createTempDirectory("graft-ism-kill").toString + "/logs"
+    val snap = root + "-snap"
+    Seq("1.1.1.1", "2.2.2.2").foreach { ip =>
+      LogStore.write(Seq((ip, java.sql.Timestamp.valueOf("2024-01-05 12:00:00"), 200L))
+        .toDF("ip", "ts", "status").withColumn("source", lit("ec2")), root)
+    }
+    val policy = Ism.Policy(compactAfterDays = 1, snapshotAfterDays = 3, deleteAfterDays = 7)
+    def tick() = Ism.applyPolicy(spark, root, snap, policy, asOf = "2024-01-09")
+      .as[(String, String, String)].collect().toSeq
+    // one corrupt byte under an intact .crc: the checksummed local FS
+    // fails the copy partway, as a killed tick would stop it
+    val data = Files.list(Paths.get(s"$root/log_date=2024-01-05/source=ec2")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted.last
+    val bytes = Files.readAllBytes(data)
+    Files.write(data, bytes.updated(8, (bytes(8) ^ 0xff).toByte))
+    intercept[org.apache.hadoop.fs.ChecksumException](tick())
+    Files.write(data, bytes)
+    val r = tick()
+    assert(r == Seq(("2024-01-05", "cold", "snapshotted")), s"got $r")
+    val restored = Files.createTempDirectory("graft-ism-kill-rest").toString + "/logs"
+    LogStore.restore(spark, snap, restored)
+    assert(spark.read.parquet(restored).count() == 2)
+  }
+
   test("snapshot/restore round-trips partitions via the manifest; alias swap retargets readers") {
     val base = Files.createTempDirectory("graft-snap").toString
     val v1 = s"$base/logs"; val snap = s"$base/snap"; val v2 = s"$base/logs-restored"
@@ -465,6 +491,8 @@ class LogStoreSpec extends AnyFunSuite {
       .toDF("ip", "ts", "status")
       .withColumn("source", lit("ec2"))
     LogStore.write(rows, s"$base/logs")
+    // a source name Spark escapes in its directory name
+    LogStore.write(rows.withColumn("source", lit("eks:api")), s"$base/logs")
     // byte totals agree with the filesystem's own du of the committed files
     val committed = java.nio.file.Files.walk(Paths.get(s"$base/logs")).iterator().asScala
       .filter(p => p.toString.endsWith(".parquet") && !p.getFileName.toString.startsWith("_"))
@@ -479,9 +507,16 @@ class LogStoreSpec extends AnyFunSuite {
     }
     val stats = LogStore.indexStats(spark, s"$base/logs")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    // two dates x one source; doc counts partition 6 rows 3/3
-    assert(stats.map(s => (s._1, s._2, s._3)).toSet ==
-      Set(("2024-06-01", "ec2", 3L), ("2024-06-02", "ec2", 3L)))
+    // two dates x two sources; doc counts partition 6 rows 3/3
+    assert(stats.map(s => (s._1, s._2, s._3)).toSet == (for {
+      d <- Set("2024-06-01", "2024-06-02"); src <- Set("ec2", "eks:api")
+    } yield (d, src, 3L)))
+    // each index's files and bytes are the committed files under its dir
+    val dirOf = Map("ec2" -> "ec2", "eks:api" -> "eks%3Aapi")
+    stats.foreach { s =>
+      val files = committed.filter(_.getParent == Paths.get(s"$base/logs/log_date=${s._1}/source=${dirOf(s._2)}"))
+      assert((s._4, s._5) == ((files.size.toLong, files.map(p => java.nio.file.Files.size(p)).sum)), s)
+    }
     assert(stats.forall(s => s._4 > 0 && s._5 > 0), s"files/bytes must be positive: ${stats.toSeq}")
     assert(stats.map(_._4).sum == committed.size, s"uncommitted files counted: ${stats.toSeq}")
     assert(stats.map(_._5).sum == fsBytes)

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
+import org.scalatest.Assertions._
+
 /** The Scala sources under src/main, for tests that pin where a
   * mechanism may be written out.
   */
@@ -28,6 +30,14 @@ object MainSources {
 
     /** `label` of every match of `re`. */
     def hits(re: Regex): Seq[String] = re.findAllMatchIn(text).map(m => label(m.start)).toSeq
+  }
+
+  /** A mechanism is written out only at the `allowed` labels, and each
+    * of them still writes it (the allow-list is not stale).
+    */
+  def assertOnly(hits: Seq[String], allowed: Set[String], use: String): Unit = {
+    assert(hits.filterNot(allowed).isEmpty, s"use $use: ${hits.filterNot(allowed).distinct}")
+    assert(allowed.subsetOf(hits.toSet), s"stale allow-list: ${allowed -- hits}")
   }
 
   lazy val all: List[Source] = {

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -114,24 +112,11 @@ class ParquetReadSpec extends AnyFunSuite {
     // match its own search
     val chain = ("""\.read(?=\s*\.)(?:\s*\.\w+\((?:[^()]|\([^()]*\))*\))*\s*\.""" +
       """parquet\(""").r
-    val defName = """\bdef\s+(\w+)""".r
     // reads that merge many footers or pin files under a basePath: the
     // case Spark's parallel inference job exists for
     val allowed = Set("read", "readPit", "readPitFederated", "readSnapshot",
       "readAliases", "fieldCaps").map(d => s"LogStore.scala:$d")
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"$root not found")
-    val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val hits = files.filter(_.getFileName.toString != "Parquet.scala").flatMap { p: Path =>
-      val src = new String(Files.readAllBytes(p), "UTF-8")
-      chain.findAllMatchIn(src).map { m =>
-        val enclosing = defName.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
-        s"${p.getFileName}:${enclosing.fold("?")(_.group(1))}"
-      }
-    }
-    assert(hits.filterNot(allowed).isEmpty, s"use Parquet.read: ${hits.filterNot(allowed)}")
-    assert(allowed.subsetOf(hits.toSet), s"stale allow-list: ${allowed -- hits}")
+    MainSources.assertOnly(MainSources.all.filter(_.file != "Parquet.scala").flatMap(_.hits(chain)),
+      allowed, "Parquet.read")
   }
 }

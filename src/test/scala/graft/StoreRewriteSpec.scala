@@ -9,13 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StoreRewriteSpec extends AnyFunSuite {
 
-  private def check(hits: Seq[String], allowed: Set[String], use: String): Unit = {
-    assert(hits.filterNot(allowed).isEmpty, s"use $use: ${hits.filterNot(allowed).distinct}")
-    assert(allowed.subsetOf(hits.toSet), s"stale allow-list: ${allowed -- hits}")
-  }
-
   test("hidden path names are decided only by Parquet.hidden") {
-    check(MainSources.all.flatMap(_.hits("""startsWith\("[_.]"\)""".r)),
+    MainSources.assertOnly(MainSources.all.flatMap(_.hits("""startsWith\("[_.]"\)""".r)),
       Set("Parquet.scala:hidden"), "Parquet.dataFiles")
   }
 
@@ -27,7 +22,7 @@ class StoreRewriteSpec extends AnyFunSuite {
       "LogStore.scala:followTick",
       // replaces an alias pointer file, not a store directory
       "LogStore.scala:setAlias")
-    check(MainSources.all.filter(s => Set("LogStore.scala", "Ism.scala")(s.file))
+    MainSources.assertOnly(MainSources.all.filter(s => Set("LogStore.scala", "Ism.scala")(s.file))
       .flatMap(_.hits("""\.rename\(""".r)), allowed, "LogStore.swapIn")
   }
 }

@@ -711,19 +711,9 @@ class StreamingSpec extends AnyFunSuite {
     ms.addData((1L, ts(1), "ec2", "v2", "index"), (2L, ts(1), "ec2", "", "delete"),
       (3L, ts(1), "ec2", "v1", "index"))
     // a micro-batch mixing index and delete ops is ONE append job
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try run()
-    finally {
-      org.apache.spark.GraftSparkBridge.waitListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get == 1, s"second micro-batch ran ${jobs.get} jobs")
+    val (ran, rec) = QueryMetrics.measure(spark)(run())
+    ran.toTry.get
+    assert(rec.jobs.size == 1, s"second micro-batch ran ${rec.jobs.size} jobs")
     // every version row: seq = batchId, the delete op a tombstone
     val raw = spark.read.parquet(s"$root/docs").select("doc_id", "seq", "deleted")
       .as[(Long, Long, Boolean)].collect().sorted.toSeq
