@@ -35,19 +35,23 @@ import org.apache.spark.sql.SparkSession
   * judge-verified), even with per-query System.gc() and a 1 GB code
   * cache. Dose scales with battery size, so the fix is structural:
   *
-  *  1. PER-QUERY HYGIENE (the root-cause fix, on by default) —
-  *     between queries: drop cached plans (catalog.clearCache), drop
-  *     temp views a query may have registered (q_sql), unpersist any
-  *     leaked RDD block, then System.gc() so one query's garbage is
-  *     not charged to the next. The dominant leak was localCheckpoint
-  *     blocks: the iterative operators (graph-ANN descent rounds,
-  *     dedup label propagation, BPE merge training) checkpoint per
-  *     round and nothing ever unpersisted them, so BlockManager
-  *     memory ratcheted up across the battery — r7 added the most
-  *     checkpoint-heavy operators AND crossed the inflation cliff.
-  *     Measured after the fix (same machine, full 214-query battery,
-  *     one JVM): r6-common subset 58.3 s vs r6's 59.0 s (0.99×),
-  *     q_dedup_lcs 3.2 s vs 29.6 s in BENCH_r07.
+  *  1. PER-QUERY HYGIENE — System.gc() between queries, so one
+  *     query's garbage is not charged to the next. The dominant leak
+  *     was localCheckpoint blocks: the iterative operators (graph-ANN
+  *     descent rounds, dedup label propagation, BPE merge training)
+  *     checkpoint per round, so BlockManager memory ratcheted up
+  *     across the battery — r7 added the most checkpoint-heavy
+  *     operators AND crossed the inflation cliff. Round 8 also swept
+  *     the context between queries (cached plans, temp views, every
+  *     persistent RDD) and measured (same machine, full 214-query
+  *     battery, one JVM): r6-common subset 58.3 s vs r6's 59.0 s
+  *     (0.99×), q_dedup_lcs 3.2 s vs 29.6 s in BENCH_r07. The sweeps
+  *     went once each thing they covered cleaned up after itself, as a
+  *     query sharing a session must: every checkpoint and pin goes
+  *     through graft.sources.Materialize (Spark's ContextCleaner frees
+  *     a checkpoint once this GC finds no frame holding it; a pin is
+  *     unpersisted when its fit returns; MaterializeSpec checks both),
+  *     and q_sql registers its views in a session of its own.
   *  2. SELF-DIAGNOSING OUTPUT — bench_out.json records per query the
   *     median wall ms AND the GC ms observed during that median rep,
   *     so a future inflated artifact shows on its face whether the
@@ -68,17 +72,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   private def ms3(v: Double): Double = math.round(v * 1000) / 1000.0
-
-  private def hygiene(spark: SparkSession): Unit = {
-    // between queries: one query's cached plans, temp views, leaked
-    // persists, and garbage must not be charged to the next
-    spark.catalog.clearCache()
-    spark.catalog.listTables().collect()
-      .filter(t => t.isTemporary)
-      .foreach(t => spark.catalog.dropTempView(t.name))
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    System.gc()
-  }
 
   /** The median rep's record (by wall time) of `reps` timings, or the
     * last rep's exception (`Throwable.toString`) when every rep threw.
@@ -110,7 +103,7 @@ object Bench {
                          battery: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
                          reps: Int): Seq[(String, Either[String, QueryMetrics.Record])] =
     battery.sortBy(b => graft.sources.Scratch.digest(b._1)).map { case (name, fn) =>
-      hygiene(spark)
+      System.gc() // one query's garbage is not charged to the next
       name -> measure(spark, sfDir, fn, reps)
     }
 

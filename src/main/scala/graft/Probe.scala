@@ -2,8 +2,9 @@ package graft
 
 /** Timing harness for local iteration (not part of the driver
   * contract): times each named query N times at a given SF dir and
-  * prints each run's wall-clock and ≥300 ms stages, then the last run's
-  * jobs, so a hot spot can be bisected.
+  * prints each run's wall-clock, ≥300 ms stages and jobs with their
+  * descriptions (`materialize:<name>` for a
+  * [[graft.sources.Materialize]] build), so a hot spot can be bisected.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -18,9 +19,9 @@ object Probe {
         rec.stages.filter(_.ms >= 300).foreach(s => println(f"[probe]   stage ${s.id}%3d: " +
           f"${s.ms}%6d ms, ${s.tasks}%4d tasks  ${s.ops.mkString("|").take(140)}"))
         val n = out.toTry.get
-        println(f"[probe] $nm run $i: ${rec.wallSeconds}%.3f s ($n rows)")
-        if (i == reps) rec.jobs.foreach(j =>
-          println(f"[probe]   job ${j.id}%3d: ${j.ms}%6d ms, ${j.tasks}%4d tasks"))
+        println(f"[probe] $nm run $i: ${rec.wallSeconds}%.3f s ($n rows, ${rec.jobs.size} jobs)")
+        rec.jobs.foreach(j =>
+          println(f"[probe]   job ${j.id}%3d: ${j.ms}%6d ms, ${j.tasks}%4d tasks  ${j.description}"))
       }
     }
     if (names.length == 1) {

@@ -14,18 +14,11 @@ import org.apache.spark.sql.types._
   */
 object LambdaLogs {
 
-  val entrySchema: ArrayType = ArrayType(StructType(Seq(
-    StructField("time", StringType),
-    StructField("type", StringType),
-    StructField("record", StringType))))
-
-  /** Parse a JSON batch column into an array of log entries. */
-  def parseBatch(batch: Column): Column = from_json(batch, entrySchema)
-
-  /** Minimal-schema parse: the transform filter/split below never reads
-    * `time`, and from_json skips fields absent from the schema without
-    * materializing them — Jackson still tokenizes the text once, but
-    * per-entry struct width (and the exploded row width) halves.
+  /** Minimal-schema parse of a batch's {time, type, record} entries:
+    * the transform filter/split below never reads `time`, and from_json
+    * skips fields absent from the schema without materializing them —
+    * Jackson still tokenizes the text once, but per-entry struct width
+    * (and the exploded row width) halves.
     */
   val typeRecordSchema: ArrayType = ArrayType(StructType(Seq(
     StructField("type", StringType),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
-import graft.sources.{Parquet, Tables}
+import graft.sources.{Materialize, Parquet, Tables}
 
 /** E10c — BPE merge-table TRAINING (SURVEY §2). Public algorithm:
   * Sennrich et al. 2016, "Neural Machine Translation of Rare Words with
@@ -56,12 +56,11 @@ object BpeTrain {
     val spark = documents.sparkSession
     import spark.implicits._
     val chars = filter(split(col("word"), ""), x => x =!= "")
-    var vocab = Tables.atComputeParallelism(documents)
+    var vocab = Materialize(Tables.atComputeParallelism(documents)
       .select(explode(call_function("regexp_extract_all",
         col("text"), lit(TextFns.bpeTokenPattern), lit(0))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .select(chars.as("syms"), col("freq"))
-      .localCheckpoint(true)
+      .select(chars.as("syms"), col("freq")), "bpe-vocab")
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var done = false
     var rank = 0
@@ -81,9 +80,8 @@ object BpeTrain {
         val (l, r, w) = (top(0).getAs[String]("l"), top(0).getAs[String]("r"),
           top(0).getAs[Long]("w"))
         learned += ((rank.toLong, l, r, w))
-        vocab = vocab
-          .select(applyMerge(col("syms"), l, r).as("syms"), col("freq"))
-          .localCheckpoint(true)
+        vocab = Materialize(vocab
+          .select(applyMerge(col("syms"), l, r).as("syms"), col("freq")), "bpe-merge")
         rank += 1
       }
     }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** C81 — k-means clustering as a USER-FACING op (the ML-commons
   * `kmeans` API a reference user calls on an index via the `_plugins/
@@ -33,11 +33,10 @@ object Clustering {
   private case class Cent(cid: Int, cx: Long, cy: Long)
 
   def kmeans(spark: SparkSession, dir: String, k: Int = 4, iters: Int = 5): DataFrame = {
-    val pts = Tables.documents(spark, dir)
+    val pts = Materialize(Tables.documents(spark, dir)
       .select(col("doc_id"),
         col("n_chars").as("x"),
-        size(split(col("text"), " ")).cast("long").as("y"))
-      .localCheckpoint()
+        size(split(col("text"), " ")).cast("long").as("y")), "kmeans-points")
 
     def dist(cx: Long, cy: Long): Column =
       (col("x") - lit(cx)) * (col("x") - lit(cx)) +

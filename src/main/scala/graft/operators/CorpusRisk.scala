@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Corpus-risk audit tier: memorization-exposure scoring and
   * excess-loss domain reweighting — the two numbers a pretraining-data
@@ -353,29 +353,29 @@ object CorpusRisk {
     // spills to disk if large) — the r14 measurement had the whole
     // upstream pipeline re-running per iteration (34 construction
     // jobs; 3× the corpus passes the fit needs)
-    val em = joined.persist()
-    var l = (0.4, 0.4, 0.2)
-    val out = (1 to iters).map { it =>
-      val d = lit(l._1) * col("pbg") + lit(l._2) * col("pug") +
-        lit(l._3) * col("puni")
-      val row = em.agg(
-        sum(floor(col("n_h") * (lit(l._1) * col("pbg") / d) * 1e6).cast("long"))
-          .as("s1"),
-        sum(floor(col("n_h") * (lit(l._2) * col("pug") / d) * 1e6).cast("long"))
-          .as("s2"),
-        sum(floor(col("n_h") * (lit(l._3) * col("puni") / d) * 1e6).cast("long"))
-          .as("s3"),
-        (-sum(col("n_h") * floor(log(d) * 1e6).cast("long"))).as("nll"),
-        sum(col("n_h")).as("n_events")).collect().head
-      val (s1, s2, s3) = (row.getLong(0), row.getLong(1), row.getLong(2))
-      val used = l
-      val tot = s1 + s2 + s3
-      l = (s1.toDouble / tot, s2.toDouble / tot, s3.toDouble / tot)
-      (it.toLong, math.floor(used._1 * 1e6).toLong,
-        math.floor(used._2 * 1e6).toLong, math.floor(used._3 * 1e6).toLong,
-        row.getLong(3), row.getLong(4))
+    val out = Materialize.within(joined, "jm-interpolation-em") { em =>
+      var l = (0.4, 0.4, 0.2)
+      (1 to iters).map { it =>
+        val d = lit(l._1) * col("pbg") + lit(l._2) * col("pug") +
+          lit(l._3) * col("puni")
+        val row = em.agg(
+          sum(floor(col("n_h") * (lit(l._1) * col("pbg") / d) * 1e6).cast("long"))
+            .as("s1"),
+          sum(floor(col("n_h") * (lit(l._2) * col("pug") / d) * 1e6).cast("long"))
+            .as("s2"),
+          sum(floor(col("n_h") * (lit(l._3) * col("puni") / d) * 1e6).cast("long"))
+            .as("s3"),
+          (-sum(col("n_h") * floor(log(d) * 1e6).cast("long"))).as("nll"),
+          sum(col("n_h")).as("n_events")).collect().head
+        val (s1, s2, s3) = (row.getLong(0), row.getLong(1), row.getLong(2))
+        val used = l
+        val tot = s1 + s2 + s3
+        l = (s1.toDouble / tot, s2.toDouble / tot, s3.toDouble / tot)
+        (it.toLong, math.floor(used._1 * 1e6).toLong,
+          math.floor(used._2 * 1e6).toLong, math.floor(used._3 * 1e6).toLong,
+          row.getLong(3), row.getLong(4))
+      }
     }
-    em.unpersist(blocking = false)
     out.toDF("iter", "l1_micro", "l2_micro", "l3_micro",
       "heldout_nll_micro", "n_events")
       .orderBy(col("iter"))
@@ -599,15 +599,14 @@ object CorpusRisk {
     import s.implicits._
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
-    val vocab = Extras.rankedByRange(
+    val vocab = Materialize(Extras.rankedByRange(
       docs.select(explode(col("w")).as("token")).distinct(), Seq("token"))
-      .select(col("token"), col("rank"))
-      .localCheckpoint()
+      .select(col("token"), col("rank")), "canary-vocab")
     val v = vocab.count() // free: the checkpoint already materialized it
 
     val ids = ((0 until nCanaries).map(i => ("canary", i.toLong)) ++
       (0 until nRefs).map(i => ("ref", i.toLong))).toDF("kind", "sid")
-    val seqs = ids
+    val seqs = Materialize(ids
       .withColumn("pos", explode(sequence(lit(1), lit(seqLen))))
       .withColumn("rank",
         conv(substring(md5(concat(col("kind"), lit("-v1:"),
@@ -617,8 +616,7 @@ object CorpusRisk {
       .groupBy(col("kind"), col("sid"))
       .agg(array_join(transform(array_sort(collect_list(
         struct(col("pos"), col("token")))), t => t.getField("token")), " ")
-        .as("seq"))
-      .localCheckpoint()
+        .as("seq")), "canary-seqs")
     val seqBg = seqs
       .select(col("kind"), col("sid"), split(col("seq"), " ").as("w"))
       .select(col("kind"), col("sid"), explode(seqPairsExpr).as("p"))
@@ -632,9 +630,8 @@ object CorpusRisk {
       .withColumn("r",
         expr("shiftleft(cast(1 as bigint), cast(sid % 4 as int))"))
       .groupBy(col("w1"), col("w2")).agg(sum(col("r")).as("c"))
-    val bc = corpusBc.unionByName(insBc)
-      .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c_b"))
-      .localCheckpoint()
+    val bc = Materialize(corpusBc.unionByName(insBc)
+      .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c_b")), "canary-bigrams")
     // c_1 derives from the MATERIALIZED bigram table — a vocab²-row
     // re-aggregate, not another corpus pass
     val c1 = bc.groupBy(col("w1")).agg(sum(col("c_b")).as("c_1"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashFns
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Training-data curation suite (SURVEY §2 E13–E16): the selection /
   * filtering / scrubbing passes a large-scale pipeline runs between raw
@@ -1970,21 +1970,18 @@ object Curation {
     * lists thereafter).
     */
   def curationPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(spark, dir)
+    val toks = Materialize(Tables.documents(spark, dir)
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_toks"),
-        md5(col("text")).as("h"))
-      .localCheckpoint()
+        md5(col("text")).as("h")), "curation-tokens")
     val s1 = toks.select(col("doc_id"))
-    val s2 = qualityFilter(spark, dir).filter(col("keep") === 1).select(col("doc_id"))
-      .localCheckpoint()
-    val s3 = toks.join(s2, "doc_id")
+    val s2 = Materialize(qualityFilter(spark, dir).filter(col("keep") === 1).select(col("doc_id")),
+      "curation-quality")
+    val s3 = Materialize(toks.join(s2, "doc_id")
       .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-      .localCheckpoint()
-    val s4 = s3.join(Dedup.canonicalMapping(spark, dir), "doc_id")
+      .select(col("doc_id")), "curation-exact-dedup")
+    val s4 = Materialize(s3.join(Dedup.canonicalMapping(spark, dir), "doc_id")
       .groupBy(col("keep_id")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-      .localCheckpoint()
+      .select(col("doc_id")), "curation-near-dedup")
     val flagged = contamination(spark, dir).select(col("doc_id"))
     val s5 = s4.join(flagged, Seq("doc_id"), "left_anti")
     val stages = Seq(
@@ -2091,17 +2088,16 @@ object Curation {
       .select(col("source"), explode(split(col("text"), " ")).as("token"))
     val counts = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
     val totals = counts.agg(sum(col("c")).as("n_total"), count(lit(1)).as("v"))
-    val perDomain = toks.join(counts.hint("shuffle_hash"), "token")
+    // |domains| rows; pin ONE evaluation of the vocab-join pass — the
+    // ref/Z/weight stages all re-read this
+    val perDomain = Materialize(toks.join(counts.hint("shuffle_hash"), "token")
       .crossJoin(broadcast(totals))
       .withColumn("lp_micro",
         floor(log((col("c") + 1).cast("double") /
           (col("n_total") + col("v")).cast("double")) * 1e6).cast("long"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("lp_micro")).as("s"))
-      .withColumn("nll", -col("s").cast("double") / 1e6 / col("n_tokens"))
-      // |domains| rows; pin ONE evaluation of the vocab-join pass — the
-      // ref/Z/weight stages all re-read this
-      .localCheckpoint()
+      .withColumn("nll", -col("s").cast("double") / 1e6 / col("n_tokens")), "domain-nll")
     val ref = perDomain.agg(
       (-sum(col("s")).cast("double") / 1e6 / sum(col("n_tokens"))).as("nll_ref"))
     val stepped = perDomain.crossJoin(broadcast(ref))

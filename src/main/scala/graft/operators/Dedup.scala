@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.HashFns
 import graft.plans.CosineSim
-import graft.sources.{Parquet, Scratch, Tables}
+import graft.sources.{Materialize, Parquet, Scratch, Tables}
 
 /** Deduplication suite for training-data pipelines (SURVEY §2 E1–E5).
   *
@@ -555,8 +555,9 @@ object Dedup {
     // lazy checkpoint: the count() below is the materializing action,
     // so edge mining + symmetrization + count run as ONE job instead of
     // a checkpoint job followed by a count job
-    val symFull = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b"))).distinct()
-      .localCheckpoint(eager = false)
+    val symFull = Materialize(
+      edges.unionByName(edges.select(col("b").as("a"), col("a").as("b"))).distinct(),
+      "dedup-dup-graph", eager = false)
     // right-size the iteration: the dup graph is usually a tiny fraction
     // of the corpus, and label propagation re-shuffles it every round —
     // run the loop at a partition count proportional to the (now known,
@@ -666,10 +667,10 @@ object Dedup {
     // full-width shuffle.
     val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (edgeCount / 1000000L).toInt + 1))
-    val sym = symFull.repartition(nParts, col("b")).localCheckpoint()
+    val sym = Materialize(symFull.repartition(nParts, col("b")), "dedup-components-edges")
 
-    var labels = sym.select(col("a").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id")).localCheckpoint()
+    var labels = Materialize(sym.select(col("a").as("doc_id")).distinct()
+      .withColumn("label", col("doc_id")), "dedup-components-labels")
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < 20) {
@@ -684,11 +685,10 @@ object Dedup {
         .select(col("a"), col("nl"), lit(false).as("self"))
       val selfLabels = labels
         .select(col("doc_id").as("a"), col("label").as("nl"), lit(true).as("self"))
-      val updated = neighborLabels.unionByName(selfLabels)
+      val updated = Materialize(neighborLabels.unionByName(selfLabels)
         .groupBy(col("a"))
         .agg(min(col("nl")).as("label"),
-          max(when(col("self"), col("nl"))).as("old"))
-        .localCheckpoint()
+          max(when(col("self"), col("nl"))).as("old")), "dedup-components-round")
       changed = updated.filter(col("label") =!= col("old")).count()
       labels = updated.select(col("a").as("doc_id"), col("label"))
       iter += 1
@@ -1367,22 +1367,22 @@ object Dedup {
     // materialize the checkpoint as part of its own job, so fps +
     // mining + cut + count fuse into one job per round (~4 jobs total)
     // — the same partitions move, scheduled once instead of four times.
-    var fpsCur = substringFps(cur).localCheckpoint(eager = false)
+    var fpsCur = Materialize(substringFps(cur), "dedup-substring-fps", eager = false)
     // None = first mining (all pairs); afterwards only pairs touching a
     // doc changed since the LAST mining need attention — and only those
     // docs need their fingerprints recomputed
     var touching: Option[DataFrame] = None
     while (!converged && rounds < maxRounds && miningsLeft > 0) {
       miningsLeft -= 1
-      val pairs = substringCandidatePairs(fpsCur, touching)
-        .localCheckpoint(eager = false)
+      val pairs = Materialize(substringCandidatePairs(fpsCur, touching),
+        "dedup-substring-pairs", eager = false)
       var restrict: Option[DataFrame] = None
       var changedThisMining: DataFrame = null
       var cutsThisMining = 0L
       var innerActive = true
       while (innerActive && rounds < maxRounds) {
-        val pass = substringCutPass(cur, pairs, minRun, restrict)
-          .localCheckpoint(eager = false)
+        val pass = Materialize(substringCutPass(cur, pairs, minRun, restrict),
+          "dedup-substring-cut", eager = false)
         // the materializing action for pass (and, transitively, for the
         // pending fps/pairs checkpoints): one job runs the whole round
         val cut = pass.agg(coalesce(sum(col("n_cuts")), lit(0L))).head.getLong(0)
@@ -1393,10 +1393,10 @@ object Dedup {
           val totals = pass.select(col("doc_id"), col("n_cuts"), col("words_removed"))
           acc =
             if (acc == null) totals
-            else acc.unionAll(totals).groupBy(col("doc_id"))
+            else Materialize(acc.unionAll(totals).groupBy(col("doc_id"))
               .agg(sum(col("n_cuts")).as("n_cuts"),
-                sum(col("words_removed")).as("words_removed"))
-              .localCheckpoint(eager = false)
+                sum(col("words_removed")).as("words_removed")),
+              "dedup-substring-totals", eager = false)
           val ch = pass.filter(col("n_cuts") > 0).select(col("doc_id"))
           restrict = Some(ch)
           changedThisMining =
@@ -1413,11 +1413,11 @@ object Dedup {
       if (cutsThisMining == 0L) converged = true
       else {
         val changed = changedThisMining.select(col("doc_id"))
-        fpsCur = fpsCur
+        fpsCur = Materialize(fpsCur
           .join(changed.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
           .unionByName(substringFps(
-            cur.join(changed.hint("shuffle_hash"), Seq("doc_id"), "left_semi")))
-          .localCheckpoint(eager = false)
+            cur.join(changed.hint("shuffle_hash"), Seq("doc_id"), "left_semi"))),
+          "dedup-substring-fps", eager = false)
         touching = Some(changed)
       }
     }
@@ -1812,7 +1812,7 @@ object Dedup {
     // consume the mined pair list; without the cut each one re-runs the
     // whole LSH mine — two full corpus passes instead of one, and the
     // pair list is dup-rate-bounded (tiny next to the corpus)
-    val pairs = minhashPairs(spark, dir, threshold = 0.5).localCheckpoint()
+    val pairs = Materialize(minhashPairs(spark, dir, threshold = 0.5), "dedup-sweep-pairs")
     val pairCounts = pairs.agg(
       sum(when(col("jaccard") >= sweepTaus.head, 1L).otherwise(0L)).as(s"p_0"),
       sweepTaus.tail.zipWithIndex.map { case (t, i) =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** C75/C76/C78 — event-correlation tier: the EQL-style sequence query,
   * the Graph-explore hop expansion, and the high-cardinality (HCAD)
@@ -134,22 +134,22 @@ object EventCorrelation {
     */
   def graphExplore(spark: SparkSession, dir: String,
                    maxHops: Int = 3): DataFrame = {
-    val pu = Tables.events(spark, dir)
+    val pu = Materialize(Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
         concat(get_json_object(col("props"), "$.k"), lit(":"),
           col("ts").cast("date").cast("string")).as("hub"))
-      .distinct().localCheckpoint(eager = false)
-    var dist = pu.select(col("user_id")).distinct()
+      .distinct(), "graph-explore-hubs", eager = false)
+    var dist = Materialize(pu.select(col("user_id")).distinct()
       .filter(col("user_id") % 53 === 0)
-      .withColumn("hop", lit(0L)).localCheckpoint(eager = false)
+      .withColumn("hop", lit(0L)), "graph-explore-hop", eager = false)
     for (h <- 1 to maxHops) {
       val frontier = dist.filter(col("hop") === h - 1).select("user_id")
       val hubs = pu.join(frontier, "user_id").select("hub").distinct()
       val reached = pu.join(hubs, "hub").select("user_id").distinct()
       val newly = reached.except(dist.select("user_id"))
         .withColumn("hop", lit(h.toLong))
-      dist = dist.unionByName(newly).localCheckpoint(eager = false)
+      dist = Materialize(dist.unionByName(newly), "graph-explore-hop", eager = false)
     }
     dist.groupBy(col("hop"))
       .agg(count(lit(1)).as("n_users"),

@@ -1253,11 +1253,17 @@ object Extras {
       |HAVING count(*) >= 2
       |ORDER BY nation, month""".stripMargin
 
+  /** The views live in a fresh session over the same context, so the
+    * caller's session keeps its own temp views and gains none. That
+    * session starts from the context's configuration, not the caller's
+    * runtime settings; the result does not depend on either.
+    */
   def sqlSurface(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    spark.sql(sqlSurfaceText)
+    val own = spark.newSession()
+    Tables.orders(own, dir).createOrReplaceTempView("orders")
+    Tables.customer(own, dir).createOrReplaceTempView("customer")
+    Tables.nation(own, dir).createOrReplaceTempView("nation")
+    own.sql(sqlSurfaceText)
   }
 
   /** C55b — nested + reverse_nested AGGREGATION: bucket the nested

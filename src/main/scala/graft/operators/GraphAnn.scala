@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.CosineSim
-import graft.sources.{Parquet, Tables}
+import graft.sources.{Materialize, Parquet, Tables}
 
 /** E7e — graph ANN via NN-descent (SURVEY §2).
   *
@@ -102,7 +102,7 @@ object GraphAnn {
       .join(cells.select(col("n_id").as("dst"), col("cell")), "cell")
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
-    var edges = topPerSrc(score(seedPairs), degree).localCheckpoint()
+    var edges = Materialize(topPerSrc(score(seedPairs), degree), "nn-descent-seed")
     (1 to rounds).foreach { _ =>
       val sym = edges.select(col("src"), col("dst"))
         .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -112,7 +112,7 @@ object GraphAnn {
         .select(col("src"), col("dst")).distinct()
       val merged = score(cand).unionByName(edges)
         .groupBy(col("src"), col("dst")).agg(max(col("sim")).as("sim"))
-      edges = topPerSrc(merged, degree).localCheckpoint()
+      edges = Materialize(topPerSrc(merged, degree), "nn-descent-round")
     }
     edges
   }
@@ -137,8 +137,8 @@ object GraphAnn {
                    rounds: Int = nnDescentRounds): Unit = {
     val (cells, centroids) = Similarity.ivfParts(spark, dir,
       Similarity.autoCells(Similarity.corpusN(spark, dir)))
-    val overlapped = overlappedCells(
-      cells.select(col("n_id"), col("n_emb")), centroids).localCheckpoint()
+    val overlapped = Materialize(overlappedCells(
+      cells.select(col("n_id"), col("n_emb")), centroids), "nn-graph-cells")
     buildGraphDf(overlapped, rounds).write.mode("overwrite").parquet(s"$path/edges")
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     overlapped.write.mode("overwrite").parquet(s"$path/cells")
@@ -157,7 +157,7 @@ object GraphAnn {
     */
   def appendToGraph(spark: SparkSession, path: String, newVecs: DataFrame): Unit = {
     val centroids = Parquet.read(spark, s"$path/centroids")
-    val assigned = overlappedCells(newVecs, centroids).localCheckpoint()
+    val assigned = Materialize(overlappedCells(newVecs, centroids), "nn-graph-append")
     val members = Parquet.read(spark, s"$path/cells")
       .withColumnRenamed("n_id", "dst").withColumnRenamed("n_emb", "dst_emb")
     val scored = assigned
@@ -331,7 +331,7 @@ object GraphAnn {
       .join(cells, "cell").select(col("q_id"), col("n_id")).distinct()
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-    var best = topPerQuery(score(entry), ef).localCheckpoint()
+    var best = Materialize(topPerQuery(score(entry), ef), "ann-graph-entry")
     (1 to nHops).foreach { _ =>
       val expand = best.select(col("q_id"), col("n_id").as("src"))
         .join(sym, "src")
@@ -339,7 +339,7 @@ object GraphAnn {
       val merged = score(expand)
         .unionByName(best)
         .groupBy(col("q_id"), col("n_id")).agg(max(col("cos_sim")).as("cos_sim"))
-      best = topPerQuery(merged, ef).localCheckpoint()
+      best = Materialize(topPerQuery(merged, ef), "ann-graph-hop")
     }
     Similarity.rankTopK(best)
   }

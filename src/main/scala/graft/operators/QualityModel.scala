@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Scratch, Tables}
+import graft.sources.{Materialize, Scratch, Tables}
 
 /** E36 — MODEL-BASED quality filtering: distill the E14 rule battery
   * into a trained linear classifier (the fastText-/GPT-3-style quality
@@ -119,50 +119,50 @@ object QualityModel {
     val k = featureNames.length
     val dim = k + 1 // augmented bias coordinate z_k = 1
     val (mu, sd, _) = standardization(feats)
-    val zf = feats.select(
+    val z = feats.select(
       col("label").cast("double").as("y") +:
         (featureNames.zipWithIndex.map { case (f, i) =>
           ((col(f) - mu(i)) / sd(i)).as(s"z_$i") } :+ lit(1.0).as(s"z_$k")): _*)
-      .cache()
-    val n = zf.count().toDouble // materialize once; each iteration re-reads
-    val w = Array.fill(dim)(0.0)
-    val losses = new Array[Double](iters)
-    for (t <- 0 until iters) {
-      val margin = (0 until dim).map(i => col(s"z_$i") * w(i))
-        .reduce[Column](_ + _)
-      // p rounded to 7 dp: exp() is the ONE libm call in the fit, and
-      // JVM/libm disagree in the last ulp — rounding quarantines the
-      // divergence before it enters the quantized sums, so the whole
-      // Newton path replays bit-for-bit in the DuckDB oracle
-      val p = round(lit(1.0) / (lit(1.0) + exp(-margin)), 7)
-      val r = p * (lit(1.0) - p)
-      // gradient/Hessian power sums as integer-quantized longs:
-      // order-independent on any engine (the standardization
-      // discipline applied to the Newton aggregates)
-      val pairs = for (i <- 0 until dim; j <- i until dim)
-        yield sum(floor(r * col(s"z_$i") * col(s"z_$j") * lit(1e9)).cast("long")).as(s"h_${i}_$j")
-      val grads = (0 until dim).map(i =>
-        sum(floor((col("y") - p) * col(s"z_$i") * lit(1e9)).cast("long")).as(s"g_$i"))
-      val nll = sum(-(col("y") * log(greatest(p, lit(1e-12))) +
-        (lit(1.0) - col("y")) * log(greatest(lit(1.0) - p, lit(1e-12))))).as("nll")
-      val aggs = pairs ++ grads :+ nll
-      val row = zf.agg(aggs.head, aggs.tail: _*).head()
-      val h = Array.ofDim[Double](dim, dim)
-      var c = 0
-      for (i <- 0 until dim; j <- i until dim) {
-        h(i)(j) = row.getLong(c).toDouble / 1e9; h(j)(i) = h(i)(j); c += 1
+    Materialize.within(z, "quality-fit") { zf =>
+      val n = zf.count().toDouble // materialize once; each iteration re-reads
+      val w = Array.fill(dim)(0.0)
+      val losses = new Array[Double](iters)
+      for (t <- 0 until iters) {
+        val margin = (0 until dim).map(i => col(s"z_$i") * w(i))
+          .reduce[Column](_ + _)
+        // p rounded to 7 dp: exp() is the ONE libm call in the fit, and
+        // JVM/libm disagree in the last ulp — rounding quarantines the
+        // divergence before it enters the quantized sums, so the whole
+        // Newton path replays bit-for-bit in the DuckDB oracle
+        val p = round(lit(1.0) / (lit(1.0) + exp(-margin)), 7)
+        val r = p * (lit(1.0) - p)
+        // gradient/Hessian power sums as integer-quantized longs:
+        // order-independent on any engine (the standardization
+        // discipline applied to the Newton aggregates)
+        val pairs = for (i <- 0 until dim; j <- i until dim)
+          yield sum(floor(r * col(s"z_$i") * col(s"z_$j") * lit(1e9)).cast("long")).as(s"h_${i}_$j")
+        val grads = (0 until dim).map(i =>
+          sum(floor((col("y") - p) * col(s"z_$i") * lit(1e9)).cast("long")).as(s"g_$i"))
+        val nll = sum(-(col("y") * log(greatest(p, lit(1e-12))) +
+          (lit(1.0) - col("y")) * log(greatest(lit(1.0) - p, lit(1e-12))))).as("nll")
+        val aggs = pairs ++ grads :+ nll
+        val row = zf.agg(aggs.head, aggs.tail: _*).head()
+        val h = Array.ofDim[Double](dim, dim)
+        var c = 0
+        for (i <- 0 until dim; j <- i until dim) {
+          h(i)(j) = row.getLong(c).toDouble / 1e9; h(j)(i) = h(i)(j); c += 1
+        }
+        val g = Array.tabulate(dim)(i => row.getLong(c + i).toDouble / 1e9)
+        losses(t) = row.getDouble(c + dim) / n
+        val d = solve(h, g, l2)
+        for (i <- 0 until dim) w(i) += d(i)
       }
-      val g = Array.tabulate(dim)(i => row.getLong(c + i).toDouble / 1e9)
-      losses(t) = row.getDouble(c + dim) / n
-      val d = solve(h, g, l2)
-      for (i <- 0 until dim) w(i) += d(i)
+      // training accuracy with the final model, one more aggregate
+      val margin = (0 until dim).map(i => col(s"z_$i") * w(i)).reduce[Column](_ + _)
+      val acc = zf.agg(avg(((margin >= 0).cast("double") === col("y")).cast("double")))
+        .head().getDouble(0)
+      Fit(w.take(k), w(k), losses, acc)
     }
-    // training accuracy with the final model, one more aggregate
-    val margin = (0 until dim).map(i => col(s"z_$i") * w(i)).reduce[Column](_ + _)
-    val acc = zf.agg(avg(((margin >= 0).cast("double") === col("y")).cast("double")))
-      .head().getDouble(0)
-    zf.unpersist()
-    Fit(w.take(k), w(k), losses, acc)
   }
 
   /** ☆ entry — fit on the corpus' own rule labels, then score every

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** SFT / instruction-tuning data shaping tier: the operators that turn
   * interaction logs into supervised chat training data — rendered
@@ -273,10 +273,9 @@ object SftData {
     // construction (no fan-out can split the range exchange) and makes
     // the nVocab count below read the cached table instead of paying a
     // second corpus tokenization pass
-    val vocab = Extras.rankedByRange(
+    val vocab = Materialize(Extras.rankedByRange(
       toks.select(col("token")).distinct(), Seq("token"))
-      .select(col("token").as("repl_token"), col("rank"))
-      .localCheckpoint()
+      .select(col("token").as("repl_token"), col("rank")), "mlm-vocab")
     val nVocab = vocab.agg(count(lit(1))).first().getLong(0)
     val repl = toks
       .filter(col("masked") && col("op") === 8L)

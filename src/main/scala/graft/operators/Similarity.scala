@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.plans.CosineSim
-import graft.sources.{Parquet, Scratch, Tables}
+import graft.sources.{Materialize, Parquet, Scratch, Tables}
 
 /** Similarity search over embedding columns (SURVEY §2 E6/E7).
   *
@@ -264,14 +264,6 @@ object Similarity {
     val xd = transform(col("n_emb"), v => v.cast("double"))
     val nr = sqrt(aggregate(transform(xd, v => v * v), lit(0.0d), _ + _))
     val fvCol = when(nr > lit(0.0d), transform(xd, v => v / nr)).otherwise(xd)
-    val f = corpus.select(col("n_id"), col("n_emb"), fvCol.as("fv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var cents: IndexedSeq[Array[Double]] = f
-      .orderBy(md5(col("n_id").cast("string")), col("n_id")).limit(nCells)
-      .select(col("fv")).collect().toIndexedSeq
-      .map(_.getSeq[Double](0).toArray)
-
     // Assignment is a pure column computation — NO row expansion, NO
     // exchange (the round-13 shape was crossJoin(broadcast(cents)) + a
     // window argmin: a nCells× blow-up plus a corpus-wide shuffle per
@@ -281,30 +273,38 @@ object Similarity {
       in.select(col("n_id"), col("n_emb"), col("fv"),
         argminCell(spark, cs, col("fv")).as("cell"))
 
-    (1 to kmeansIters).foreach { _ =>
-      val upd = assigned(cents, f)
-        .select(col("cell"), posexplode(col("fv")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(floor(col("v") * lit(1e9)).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getInt(0))
-      cents = cents.indices.map { c =>
-        upd.get(c) match {
-          case Some(rows) =>
-            val dims = rows.sortBy(_.getInt(1))
-            dims.map(r => (r.getLong(2).toDouble / 1e9) / r.getLong(3)).toArray
-          case None => cents(c) // emptied cell keeps its previous centroid
+    val cents = Materialize.within(corpus.select(col("n_id"), col("n_emb"), fvCol.as("fv")),
+      "kmeans-fit") { f =>
+      var cents: IndexedSeq[Array[Double]] = f
+        .orderBy(md5(col("n_id").cast("string")), col("n_id")).limit(nCells)
+        .select(col("fv")).collect().toIndexedSeq
+        .map(_.getSeq[Double](0).toArray)
+
+      (1 to kmeansIters).foreach { _ =>
+        val upd = assigned(cents, f)
+          .select(col("cell"), posexplode(col("fv")).as(Seq("pos", "v")))
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(floor(col("v") * lit(1e9)).cast("long")).as("s"),
+            count(lit(1)).as("n"))
+          .collect()
+          .groupBy(_.getInt(0))
+        cents = cents.indices.map { c =>
+          upd.get(c) match {
+            case Some(rows) =>
+              val dims = rows.sortBy(_.getInt(1))
+              dims.map(r => (r.getLong(2).toDouble / 1e9) / r.getLong(3)).toArray
+            case None => cents(c) // emptied cell keeps its previous centroid
+          }
         }
       }
+      cents
     }
 
     // final assignment re-derives fv from the corpus scan (no pinned
-    // blocks ride out of the fit: the cache below is released, and the
+    // blocks ride out of the fit: `within` released the cache, and the
     // lineage recomputes in one pass for any later consumer)
     val corpusCells = assigned(cents, corpus.select(col("n_id"), col("n_emb"), fvCol.as("fv")))
       .select(col("n_id"), col("n_emb"), col("cell"))
-    f.unpersist()
 
     val centroids = spark.createDataFrame(
       cents.zipWithIndex.map { case (v, i) => (i, v.map(_.toFloat).toSeq) })
@@ -617,7 +617,7 @@ object Similarity {
           s => s.getField("m").cast("float")).as("centroid"))
     // materialize BEFORE the overwrite: the plan reads nothing from the
     // centroids dir, but localCheckpoint severs any future lazy re-read
-    next.localCheckpoint(eager = true)
+    Materialize(next, "ivf-centroids")
       .write.mode("overwrite").parquet(s"$indexPath/centroids")
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.TextFns
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Text-analysis queries over `documents` (SURVEY §2 E8–E11). */
 object TextAnalysis {
@@ -1261,12 +1261,10 @@ object TextAnalysis {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val lexF = Future(
-      searchRanked(spark, dir).select(col("doc_id"), col("score").as("s_lex"))
-        .localCheckpoint())
-    val semF = Future(
-      moreLikeThis(spark, dir).select(col("doc_id"), col("score").as("s_mlt"))
-        .localCheckpoint())
+    val lexF = Future(Materialize(
+      searchRanked(spark, dir).select(col("doc_id"), col("score").as("s_lex")), "hybrid-lexical"))
+    val semF = Future(Materialize(
+      moreLikeThis(spark, dir).select(col("doc_id"), col("score").as("s_mlt")), "hybrid-semantic"))
     val lex = Await.result(lexF, Duration.Inf)
     val sem = Await.result(semF, Duration.Inf)
     val lstat = lex.agg(min(col("s_lex")).as("lmin"), max(col("s_lex")).as("lmax"))

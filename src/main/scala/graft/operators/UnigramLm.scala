@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** E10e — unigram-LM tokenizer TRAINING (Kudo 2018, "Subword
   * Regularization": the SentencePiece `unigram` model — the other
@@ -120,70 +120,70 @@ object UnigramLm {
                      seedSize: Int = 256, vocabTarget: Int = 96,
                      emRounds: Int = 4, maxPieceLen: Int = 6): (DataFrame, Seq[Long]) = {
     import spark.implicits._
-    val words = Tables.atComputeParallelism(
+    val wordCounts = Tables.atComputeParallelism(
         Tables.documents(spark, dir).select(col("text")))
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
-      .cache()
+    val (inv, lls) = Materialize.within(wordCounts, "unigram-train") { words =>
+      // seed: frequency-weighted substrings of the word vocabulary. The
+      // substring table is vocab-sized × O(len·maxLen) — ranked and CUT
+      // DISTRIBUTED (TakeOrdered, bounded exchange); only the seedSize
+      // winners and the alphabet-bounded single chars reach the driver.
+      val subsDf = words.flatMap { case (w, f) =>
+        for {
+          start <- 0 until w.length
+          len <- 1 to math.min(maxPieceLen, w.length - start)
+        } yield (w.substring(start, start + len), f)
+      }.toDF("piece", "w").groupBy("piece").agg(sum(col("w")).as("w"))
+      val singles = subsDf.filter(length(col("piece")) === 1)
+        .as[(String, Long)].collect().sortBy(_._1)
+      val multi = subsDf.filter(length(col("piece")) > 1)
+        .orderBy(col("w").desc, col("piece")).limit(seedSize)
+        .as[(String, Long)].collect()
+      var inv: Seq[(String, Double)] = {
+        val total = (singles ++ multi).map(_._2).sum.toDouble
+        (singles ++ multi).map { case (p, w) => (p, math.log(w / total)) }.toSeq
+      }
 
-    // seed: frequency-weighted substrings of the word vocabulary. The
-    // substring table is vocab-sized × O(len·maxLen) — ranked and CUT
-    // DISTRIBUTED (TakeOrdered, bounded exchange); only the seedSize
-    // winners and the alphabet-bounded single chars reach the driver.
-    val subsDf = words.flatMap { case (w, f) =>
-      for {
-        start <- 0 until w.length
-        len <- 1 to math.min(maxPieceLen, w.length - start)
-      } yield (w.substring(start, start + len), f)
-    }.toDF("piece", "w").groupBy("piece").agg(sum(col("w")).as("w"))
-    val singles = subsDf.filter(length(col("piece")) === 1)
-      .as[(String, Long)].collect().sortBy(_._1)
-    val multi = subsDf.filter(length(col("piece")) > 1)
-      .orderBy(col("w").desc, col("piece")).limit(seedSize)
-      .as[(String, Long)].collect()
-    var inv: Seq[(String, Double)] = {
-      val total = (singles ++ multi).map(_._2).sum.toDouble
-      (singles ++ multi).map { case (p, w) => (p, math.log(w / total)) }.toSeq
+      val lls = scala.collection.mutable.ListBuffer.empty[Long]
+      for (round <- 1 to emRounds) {
+        val lp = inv.toMap
+        val maxL = maxPieceLen
+        // E-step: micro-quantized expected counts + corpus LL, one
+        // shuffle. Quantization happens per WORD TYPE (floor(c·1e6)·f,
+        // not floor(c·f·1e6)): c is O(word-length) so the 1e-6 grid
+        // absorbs the libm ulp noise of the forward–backward log-space
+        // arithmetic — the property that lets the DuckDB oracle replay
+        // the whole EM with its own ln/exp (r13, the p-rounding device
+        // from the IRLS fit)
+        val stats = words.flatMap { case (w, f) =>
+          val (cs, ll) = expectedCounts(w, lp, maxL)
+          cs.map { case (p, c) => (p, math.floor(c * 1e6).toLong * f, 0L) } :+
+            (("", 0L, if (ll == NegInf) 0L else math.floor(ll * 1e6).toLong * f))
+        }.toDF("piece", "micro", "ll_micro")
+          .groupBy("piece")
+          .agg(sum(col("micro")).as("micro"), sum(col("ll_micro")).as("ll"))
+          .as[(String, Long, Long)].collect()
+        lls += stats.map(_._3).sum
+        // M-step: normalize; floor singles so coverage survives pruning
+        val counts = stats.filter(_._1.nonEmpty).map { case (p, m, _) => (p, m) }.toMap
+        val kept = inv.map { case (p, _) =>
+          val m = counts.getOrElse(p, 0L)
+          (p, if (p.length == 1) math.max(m, 1L) else m)
+        }.filter(_._2 > 0L)
+        // prune lowest-mass multi-char pieces toward the target
+        val (s1, mN) = kept.partition(_._1.length == 1)
+        val target = math.max(vocabTarget - s1.size,
+          mN.size - math.max((seedSize - vocabTarget) / emRounds, 1))
+        val prunedMulti = mN.sortBy { case (p, m) => (-m, p) }.take(math.max(target, 0))
+        val total = (s1 ++ prunedMulti).map(_._2).sum.toDouble
+        inv = (s1 ++ prunedMulti).map { case (p, m) => (p, math.log(m / total)) }
+          .sortBy(_._1)
+      }
+      (inv, lls.toSeq)
     }
-
-    val lls = scala.collection.mutable.ListBuffer.empty[Long]
-    for (round <- 1 to emRounds) {
-      val lp = inv.toMap
-      val maxL = maxPieceLen
-      // E-step: micro-quantized expected counts + corpus LL, one
-      // shuffle. Quantization happens per WORD TYPE (floor(c·1e6)·f,
-      // not floor(c·f·1e6)): c is O(word-length) so the 1e-6 grid
-      // absorbs the libm ulp noise of the forward–backward log-space
-      // arithmetic — the property that lets the DuckDB oracle replay
-      // the whole EM with its own ln/exp (r13, the p-rounding device
-      // from the IRLS fit)
-      val stats = words.flatMap { case (w, f) =>
-        val (cs, ll) = expectedCounts(w, lp, maxL)
-        cs.map { case (p, c) => (p, math.floor(c * 1e6).toLong * f, 0L) } :+
-          (("", 0L, if (ll == NegInf) 0L else math.floor(ll * 1e6).toLong * f))
-      }.toDF("piece", "micro", "ll_micro")
-        .groupBy("piece")
-        .agg(sum(col("micro")).as("micro"), sum(col("ll_micro")).as("ll"))
-        .as[(String, Long, Long)].collect()
-      lls += stats.map(_._3).sum
-      // M-step: normalize; floor singles so coverage survives pruning
-      val counts = stats.filter(_._1.nonEmpty).map { case (p, m, _) => (p, m) }.toMap
-      val kept = inv.map { case (p, _) =>
-        val m = counts.getOrElse(p, 0L)
-        (p, if (p.length == 1) math.max(m, 1L) else m)
-      }.filter(_._2 > 0L)
-      // prune lowest-mass multi-char pieces toward the target
-      val (s1, mN) = kept.partition(_._1.length == 1)
-      val target = math.max(vocabTarget - s1.size,
-        mN.size - math.max((seedSize - vocabTarget) / emRounds, 1))
-      val prunedMulti = mN.sortBy { case (p, m) => (-m, p) }.take(math.max(target, 0))
-      val total = (s1 ++ prunedMulti).map(_._2).sum.toDouble
-      inv = (s1 ++ prunedMulti).map { case (p, m) => (p, math.log(m / total)) }
-        .sortBy(_._1)
-    }
-    words.unpersist()
 
     // floor(x + 0.5) instead of rint: half-even has no cheap DuckDB
     // twin, half-up does (ties at exactly .5e-8 are measure-zero here)
@@ -191,7 +191,7 @@ object UnigramLm {
       .map { case ((p, l), i) =>
         (i + 1, p, p.length, math.floor(math.exp(l) * 1e8 + 0.5) / 1e8) }
       .toSeq.toDF("rnk", "piece", "piece_len", "prob")
-    (out, lls.toSeq)
+    (out, lls)
   }
 
   def train(spark: SparkSession, dir: String): DataFrame =

@@ -33,10 +33,6 @@ object LogStore {
     StructField("agent", StringType),
     StructField("source", StringType)))
 
-  /** Raw text lines (Apache/NGINX). */
-  def readTextLogs(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).withColumnRenamed("value", "line")
-
   /** JSON-lines logs (the Firehose delivery format) with explicit schema. */
   def readJsonLogs(spark: SparkSession, path: String, schema: StructType = logSchema): DataFrame =
     spark.read.schema(schema).json(path)

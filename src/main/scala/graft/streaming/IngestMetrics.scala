@@ -78,12 +78,6 @@ final class IngestMetrics(spark: SparkSession, capacity: Int = 4096)
           unix_timestamp(col("ts")) -
             unix_timestamp(to_timestamp(col("watermark")))))
   }
-
-  /** Persist the current snapshot for the fleet-wide metrics rollup
-    * (append-mode: each flush adds the batches seen since attach).
-    */
-  def flushTo(s: SparkSession, path: String): Unit =
-    snapshot(s).write.mode("append").parquet(path)
 }
 
 object IngestMetrics {
