@@ -126,7 +126,7 @@ object QueryDsl {
   // metacharacter (`\*` = literal asterisk). Tokenize left-to-right so the
   // escape is seen BEFORE the wildcard substitution; LIKE's own
   // metacharacters (% _ \) are escaped with LIKE's default `\`.
-  private def toLike(p: String): String = {
+  private[functions] def toLike(p: String): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < p.length) {

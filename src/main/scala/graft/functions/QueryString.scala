@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.{DataType, NumericType, StructType}
   * Supported subset (the operators the search bar's docs teach):
   *   - `field:value` term match; numeric fields compare numerically
   *   - `field:"quoted value"` exact match (spaces/colons inside)
-  *   - `field:pre*`, `field:te?m` wildcards (`*` any run, `?` one char)
+  *   - `field:pre*`, `field:te?m` wildcards (`*` any run, `?` one char,
+  *     a backslash escapes either: `a\*b` matches the text `a*b`)
   *   - `field:[a TO b]` / `field:{a TO b}` ranges, mixed brackets OK
   *   - `field:>n  >=n  <n  <=n` open ranges
   *   - `AND OR NOT` (case-insensitive) + `&& || !`, parentheses;
@@ -141,11 +142,6 @@ object QueryString {
     case _              => lit(raw)
   }
 
-  /** `*`/`?` wildcards → SQL LIKE, escaping LIKE's own metacharacters. */
-  private def likePattern(v: String): String =
-    v.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
-      .replace('*', '%').replace('?', '_')
-
   private def clause(schema: StructType, defaultFields: Seq[String],
                      runtime: Map[String, (DataType, Column)],
                      synonyms: Map[String, Seq[String]],
@@ -189,7 +185,7 @@ object QueryString {
       else if (body.startsWith(">")) c > typedLit(dt, body.drop(1))
       else if (body.startsWith("<")) c < typedLit(dt, body.drop(1))
       else if (body.startsWith("\"")) c === lit(body.stripPrefix("\"").stripSuffix("\""))
-      else if (body.contains('*') || body.contains('?')) c.like(likePattern(body))
+      else if (body.contains('*') || body.contains('?')) c.like(QueryDsl.toLike(body))
       else {
         // plain term clause: synonym rows expand here too (ranges and
         // wildcards don't analyze, matching the synonym filter's scope)

@@ -1344,15 +1344,11 @@ object Extras {
     // near-integer quotient on the wrong side of the boundary
     val scoreU = expr(
       s"(2000000L * ${pivotS}L) div (${pivotS}L + abs(cast(ts as long) - ${originS}L))")
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    Tables.events(spark, dir)
+    val scored = Tables.events(spark, dir)
       .filter(col("event_type") === eventType)
       .select(col("event_id"), scoreU.as("score_u"))
-      .agg(topk(col("event_id"), col("score_u").cast("double")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("event_id"),
-        col("col._1").cast("long").as("score_u"),
-        (col("pos") + 1).cast("long").as("rank"))
+    graft.plans.TopKAgg.rank(scored, k, "event_id", col("score_u").cast("double"))
+      .select(col("event_id"), col("score").cast("long").as("score_u"), col("rank"))
       .orderBy(col("rank"))
   }
 

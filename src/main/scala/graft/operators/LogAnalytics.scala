@@ -1318,7 +1318,7 @@ object LogAnalytics {
   def termsWithOther(spark: SparkSession, dir: String, k: Int = 2): DataFrame = {
     val perUser = Tables.events(spark, dir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-    val topk = graft.plans.TopKAgg.udafFor(k)
+    val topk = graft.plans.TopKAgg.udafFor[Long](k)
     // one pass over the per-key aggregate: bounded top-k buffer + total
     val top = perUser
       .agg(topk(col("user_id"), col("n").cast("double")).as("top"),

@@ -39,12 +39,8 @@ object Ltr {
   private val wPhrase = 0.75; private val wDlnorm = -0.1
 
   def ltrRescore(spark: SparkSession, dir: String): DataFrame = {
-    val topw = graft.plans.TopKAgg.udafFor(candidates)
     val scored = TextAnalysis.bm25Scored(spark, dir, terms)
-    val cand = scored.filter(col("score") > 0)
-      .agg(topw(col("doc_id"), col("score")).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t._2").as("doc_id"))
+    val cand = TextAnalysis.topHits(scored, candidates).select(col("doc_id"))
     val feats = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
       .join(broadcast(scored.join(broadcast(cand), "doc_id")), "doc_id")

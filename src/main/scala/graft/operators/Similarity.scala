@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.plans.CosineSim
+import graft.plans.{CosineSim, TopKAgg}
 import graft.sources.{Materialize, Parquet, Scratch, Tables}
 
 /** Similarity search over embedding columns (SURVEY §2 E6/E7).
@@ -99,6 +99,20 @@ object Similarity {
       .orderBy(col("q_id"), col("rank"))
   }
 
+  /** The second stage of every quantized ANN search: keep each query's
+    * `rerank` best (q_id, n_id) pairs by the coarse `score` (mergeable
+    * TopKAgg, O(q·rerank) exchange), rescore only those at full
+    * precision, then [[rankTopK]].
+    */
+  private def rerankExact(coarse: DataFrame, score: Column, rerank: Int,
+                          q: DataFrame, c: DataFrame): DataFrame =
+    rankTopK(
+      TopKAgg.rank(coarse, rerank, "n_id", score, by = Seq("q_id"))
+        .select(col("q_id"), col("n_id"))
+        .join(c, "n_id")
+        .join(q.withColumnRenamed("q_emb", "q_emb2"), "q_id")
+        .withColumn("cos_sim", round(CosineSim(col("q_emb2"), col("n_emb")), 6)))
+
   /** E6 — brute-force cosine top-k (the exact baseline). Ranks on the
     * ROUNDED similarity (6 dp) with n_id tiebreak so ordering is
     * reproducible bit-for-bit across engines.
@@ -129,15 +143,12 @@ object Similarity {
     */
   def annTopKAgg(spark: SparkSession, dir: String): DataFrame = {
     val (q, c) = queryCorpus(spark, dir)
-    val topk = graft.plans.TopKAgg.udafFor(topK)
-    c.join(broadcast(q))
+    val scored = c.join(broadcast(q))
       .select(col("q_id"), col("n_id"),
         round(CosineSim(col("q_emb"), col("n_emb")), 6).as("cos_sim"))
-      .groupBy(col("q_id"))
-      .agg(topk(col("n_id"), col("cos_sim")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col._2").as("n_id"), col("col._1").as("cos_sim"),
-        (col("pos") + 1).cast("int").as("rank"))
+    TopKAgg.rank(scored, topK, "n_id", col("cos_sim"), by = Seq("q_id"))
+      .select(col("q_id"), col("n_id"), col("score").as("cos_sim"),
+        col("rank").cast("int").as("rank"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -763,21 +774,12 @@ object Similarity {
         (cd.cast("int") + 128).cast("double") * element_at(stepsL, i + 1))
         .cast("float"))
     val quantized = c.select(col("n_id"), col("n_emb"), codes.as("codes"))
-    val coarseK = graft.plans.TopKAgg.udafFor(rerank)
     val coarse = quantized
       .withColumn("dq_emb", dequant)
       .join(broadcast(q))
       .select(col("q_id"), col("n_id"),
         CosineSim(col("q_emb"), col("dq_emb")).as("coarse_sim"))
-      .groupBy(col("q_id"))
-      .agg(coarseK(col("n_id"), col("coarse_sim")).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t._2").as("n_id"))
-    rankTopK(
-      coarse
-        .join(c, "n_id")
-        .join(q.withColumnRenamed("q_emb", "q_emb2"), "q_id")
-        .withColumn("cos_sim", round(CosineSim(col("q_emb2"), col("n_emb")), 6)))
+    rerankExact(coarse, col("coarse_sim"), rerank, q, c)
   }
 
   /** E7f oracle (r13, was ☆): per-dim float extrema → double
@@ -1343,21 +1345,12 @@ object Similarity {
     val rr = if (rerank > 0) rerank else autoRerank(corpusN(spark, dir))
     val (q, c) = queryCorpus(spark, dir)
     val (codes, lut) = pqPartsMemoized(spark, dir, q, m, ks, iters, trainSample)
-    val coarseK = graft.plans.TopKAgg.udafFor(rr)
-    val cand = codes.join(broadcast(lut), Seq("sub", "cent_id"))
+    val adc = codes.join(broadcast(lut), Seq("sub", "cent_id"))
       .groupBy(col("q_id"), col("n_id"))
       // pico-quantized ADC sum: 8 doubles summed as integers, so the
       // score is independent of accumulation order on any engine
       .agg(sum(round(col("part") * lit(1e12)).cast("long")).cast("double").as("adc_sim"))
-      .groupBy(col("q_id"))
-      .agg(coarseK(col("n_id"), col("adc_sim")).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t._2").as("n_id"))
-    rankTopK(
-      cand
-        .join(c, "n_id")
-        .join(q.withColumnRenamed("q_emb", "q_emb2"), "q_id")
-        .withColumn("cos_sim", round(CosineSim(col("q_emb2"), col("n_emb")), 6)))
+    rerankExact(adc, col("adc_sim"), rr, q, c)
   }
 
   /** E7g/E7i deployment shape: the PQ codebook + corpus codes are a
@@ -1501,20 +1494,11 @@ object Similarity {
       .select(col("q_id"), col("cell"))
       .join(corpusCells.select(col("n_id"), col("cell")), "cell")
       .select(col("q_id"), col("n_id"))
-    val coarseK = graft.plans.TopKAgg.udafFor(rr)
-    val cand = candPairs.join(codes, "n_id")
+    val adc = candPairs.join(codes, "n_id")
       .join(broadcast(lut), Seq("q_id", "sub", "cent_id"))
       .groupBy(col("q_id"), col("n_id"))
       .agg(sum(round(col("part") * lit(1e12)).cast("long")).cast("double").as("adc_sim"))
-      .groupBy(col("q_id"))
-      .agg(coarseK(col("n_id"), col("adc_sim")).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t._2").as("n_id"))
-    rankTopK(
-      cand
-        .join(c, "n_id")
-        .join(q.withColumnRenamed("q_emb", "q_emb2"), "q_id")
-        .withColumn("cos_sim", round(CosineSim(col("q_emb2"), col("n_emb")), 6)))
+    rerankExact(adc, col("adc_sim"), rr, q, c)
   }
   /** DuckDB replay of pqTrainEncode + pqLut (r13): the driver-side
     * Lloyd is sample-order-initialized with integer-quantized updates,
@@ -1686,18 +1670,9 @@ object Similarity {
     val qc = q.select(col("q_id"), qLo.as("q_lo"), qHi.as("q_hi"))
     val cc = c.select(col("n_id"), cLo.as("c_lo"), cHi.as("c_hi"))
     val ham = (bit_count(expr("q_lo ^ c_lo")) + bit_count(expr("q_hi ^ c_hi"))).cast("double")
-    val coarseK = graft.plans.TopKAgg.udafFor(rr)
-    val cand = cc.join(broadcast(qc))
+    val hamming = cc.join(broadcast(qc))
       .select(col("q_id"), col("n_id"), (-ham).as("neg_ham"))
-      .groupBy(col("q_id"))
-      .agg(coarseK(col("n_id"), col("neg_ham")).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t._2").as("n_id"))
-    rankTopK(
-      cand
-        .join(c, "n_id")
-        .join(q.withColumnRenamed("q_emb", "q_emb2"), "q_id")
-        .withColumn("cos_sim", round(CosineSim(col("q_emb2"), col("n_emb")), 6)))
+    rerankExact(hamming, col("neg_ham"), rr, q, c)
   }
 
   val annBqSql: String =

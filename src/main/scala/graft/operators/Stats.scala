@@ -490,7 +490,7 @@ object Stats {
       .filter(col("event_type").isin(typeA, typeB))
       .select(col("event_type"), h.as("h"))
       .distinct()
-    val topk = graft.plans.TopKAgg.udafFor(k)
+    val topk = graft.plans.TopKAgg.udafFor[Long](k)
     // k smallest = TopKAgg on score −h; retained ids back out of _2
     val sketches = distinctH
       .groupBy(col("event_type"))

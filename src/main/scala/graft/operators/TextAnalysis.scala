@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.TextFns
+import graft.plans.TopKAgg
 import graft.sources.{Materialize, Tables}
 
 /** Text-analysis queries over `documents` (SURVEY §2 E8–E11). */
@@ -383,16 +384,12 @@ object TextAnalysis {
       .orderBy(col("tfidf").desc, col("token"))
       .limit(nTerms)
       .select(col("token"), col("idf_u"))
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    tf.filter(col("doc_id") =!= seedId)
+    val scored = tf.filter(col("doc_id") =!= seedId)
       .join(broadcast(seedTerms), "token")
       .groupBy(col("doc_id"))
       .agg(sum(col("tc") * col("idf_u")).as("s_u"))
-      .agg(topk(col("doc_id"), col("s_u").cast("double")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"),
-        (col("col._1") / 1e6).as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    TopKAgg.rank(scored, k, "doc_id", col("s_u").cast("double"))
+      .select(col("doc_id"), (col("score") / 1e6).as("score"), col("rank"))
       .orderBy(col("rank"))
   }
 
@@ -427,34 +424,53 @@ object TextAnalysis {
       |FROM ranked WHERE rank <= 20
       |ORDER BY rank""".stripMargin
 
-  /** C3b — relevance-RANKED full-text search: BM25 (Robertson/Spärck
-    * Jones, the scoring OpenSearch's `match` query uses; k1=1.2,
-    * b=0.75). The boolean `search` query answers "which docs match";
-    * this answers Discover's actual question, "which docs match BEST".
-    *
-    * Shape for scale: ONE shuffle (groupBy doc_id) computes per-doc
-    * term frequencies for the fixed query-term list as conditional sums
-    * — no per-term pass, no token-keyed join at all (the df/avgdl side
-    * collapses to a single broadcast stats row, since df for a fixed
-    * term list is just a handful of conditional counts). Determinism:
-    * tf/df/dl are integer counts, and the per-term score sum is a fixed
-    * left-to-right expression, not a float aggregation over rows — so
-    * the result is hash-stable across engines and partitionings. The
-    * final top-k is the F5 TopKAgg bounded aggregator (same tie order
-    * as a rank window: score DESC, doc_id ASC) — map-side partials cut
-    * the exchange to O(k) rows and there is NO single-partition sort.
+  /** BM25 idf (Robertson/Spärck Jones) over the stats row's n_docs:
+    * log(1 + (N − df + 0.5)/(df + 0.5)).
     */
-  /** Every doc scored by BM25 for a fixed term list (doc_id, score) —
-    * the shared primary for C3b ranked search and C60 rescore.
+  private def bm25Idf(df: Column): Column =
+    log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5))
+
+  /** BM25 tf saturation with length normalisation, k1 = 1.2, b = 0.75:
+    * tf·(k1 + 1)/(tf + k1·(1 − b + b·dl/avgdl)).
     */
-  private[operators] def bm25Scored(spark: SparkSession, dir: String,
-                                    terms: Seq[String]): DataFrame = {
+  private def bm25TfNorm(tf: Column, dl: Column, avgdl: Column): Column =
+    tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl / avgdl))
+
+  /** Term `t`'s (idf, tf-norm) over field `f`'s columns — `tf_f_t`,
+    * `df_f_t`, `dl_f`, `avgdl_f`; `f = ""` is the whole text (`tf_t`,
+    * `df_t`, `dl`, `avgdl`).
+    */
+  private def bm25Parts(t: String, f: String = ""): (Column, Column) = {
+    val (pre, suf) = if (f.isEmpty) ("", "") else (s"${f}_", s"_$f")
+    (bm25Idf(col(s"df_$pre$t")),
+      bm25TfNorm(col(s"tf_$pre$t"), col(s"dl$suf"), col(s"avgdl$suf")))
+  }
+
+  /** Σ_t idf·tf-norm over field `f`: a fixed left-to-right expression
+    * chain, not a float aggregation over rows, so the sum is
+    * hash-stable across engines and partitionings.
+    */
+  private def bm25Sum(terms: Seq[String], f: String = ""): Column =
+    terms.map { t => val (idf, tfNorm) = bm25Parts(t, f); idf * tfNorm }.reduce(_ + _)
+
+  /** Every doc scored by BM25 for a fixed term list: `doc_id`, the
+    * `carry` columns, `dl`, `tf_t` and the `extra` per-doc aggregates,
+    * the stats row (`n_docs`, `avgdl`, `df_t`) and `score` =
+    * round(Σ bm25, 6). ONE shuffle (groupBy doc_id) computes
+    * the per-doc term frequencies as conditional sums — no per-term
+    * pass, no token-keyed join — and the df/avgdl side collapses to a
+    * single broadcast stats row, since df for a fixed term list is a
+    * handful of conditional counts. tf/df/dl are integer counts.
+    */
+  private[operators] def bm25Scored(spark: SparkSession, dir: String, terms: Seq[String],
+                                    carry: Seq[String] = Nil, extra: Seq[Column] = Nil): DataFrame = {
+    val keys = col("doc_id") +: carry.map(col)
     val perDoc = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .groupBy(col("doc_id"))
+      .select(keys :+ explode(split(col("text"), " ")).as("token"): _*)
+      .groupBy(keys: _*)
       .agg(count(lit(1)).cast("double").as("dl"),
         terms.map(t =>
-          sum(when(col("token") === t, 1).otherwise(0)).cast("double").as(s"tf_$t")): _*)
+          sum(when(col("token") === t, 1).otherwise(0)).cast("double").as(s"tf_$t")) ++ extra: _*)
     // corpus stats: n_docs, avgdl (exact — integer-valued doubles sum
     // exactly), and per-term document frequencies, all in one tiny row
     val stats = perDoc.agg(
@@ -462,27 +478,31 @@ object TextAnalysis {
       (sum(col("dl")) / count(lit(1))).as("avgdl") +:
         terms.map(t =>
           sum(when(col(s"tf_$t") > 0, 1).otherwise(0)).cast("double").as(s"df_$t")): _*)
-    val scoreExpr = terms.map { t =>
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-        (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-    }.reduce(_ + _)
     perDoc.crossJoin(broadcast(stats))
-      .withColumn("score", round(scoreExpr, 6))
+      .withColumn("score", round(bm25Sum(terms), 6))
   }
 
+  /** The ranked hits of a scored frame: docs with score > 0, top k by
+    * the bounded TopKAgg (score DESC, doc_id ASC), unsorted.
+    */
+  private[operators] def topHits(scored: DataFrame, k: Int): DataFrame =
+    TopKAgg.rank(scored.filter(col("score") > 0), k, "doc_id", col("score"))
+
+  /** C3b — relevance-RANKED full-text search: BM25 (Robertson/Spärck
+    * Jones, the scoring OpenSearch's `match` query uses; k1=1.2,
+    * b=0.75). The boolean `search` query answers "which docs match";
+    * this answers Discover's actual question, "which docs match BEST".
+    *
+    * Shape for scale: [[bm25Scored]]'s one doc-keyed shuffle and
+    * one-row stats broadcast; the final top-k is the F5 TopKAgg
+    * bounded aggregator (same tie order as a rank window: score DESC,
+    * doc_id ASC) — map-side partials cut the exchange to O(k) rows and
+    * there is NO single-partition sort.
+    */
   def searchRanked(spark: SparkSession, dir: String,
                    terms: Seq[String] = Seq("spark", "window", "merge"),
-                   k: Int = 20): DataFrame = {
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    bm25Scored(spark, dir, terms)
-      .filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .orderBy(col("rank"))
-  }
+                   k: Int = 20): DataFrame =
+    topHits(bm25Scored(spark, dir, terms), k).orderBy(col("rank"))
 
   /** C60 — the rescore API (OpenSearch `rescore`): re-rank only the top
     * `window` hits of the primary query with a SECOND, more expensive
@@ -501,13 +521,8 @@ object TextAnalysis {
               phrase: String = "spark window",
               window: Int = 50, k: Int = 20,
               queryWeight: Double = 1.0, rescoreWeight: Double = 2.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val topw = graft.plans.TopKAgg.udafFor(window)
-    val windowDocs = bm25Scored(spark, dir, terms)
-      .filter(col("score") > 0)
-      .agg(topw(col("doc_id"), col("score")).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t._2").as("doc_id"), col("t._1").as("base_score"))
+    val windowDocs = topHits(bm25Scored(spark, dir, terms), window)
+      .select(col("doc_id"), col("score").as("base_score"))
     val phraseHit = when(col("text").contains(phrase), 1.0).otherwise(0.0)
     Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .join(broadcast(windowDocs), "doc_id")
@@ -575,58 +590,62 @@ object TextAnalysis {
        |ORDER BY rank""".stripMargin
   }
 
-  /** C3n — multi_match, most_fields mode (the OpenSearch multi-field
-    * relevance query: one term list scored against several fields with
-    * per-field boosts, scores summed). The test corpus carries a single
-    * `text` column, so the field split is the deterministic stand-in a
-    * single-column corpus allows: `title` = the first 8 tokens, `body`
-    * = the rest (a real store would read two stored fields; the scoring
-    * pipeline is identical). Per field: its own dl/avgdl/df/tf — i.e.
-    * genuine per-field BM25, not a concatenated pseudo-field — then
-    * score = 2·bm25_title + 1·bm25_body.
-    *
-    * Scale shape is C3b's: for a FIXED term list, tf/dl collapse into
-    * per-doc conditional counts in ONE pass (no token-keyed join), the
-    * corpus stats are a single broadcast row, and the top-k is the F5
-    * mergeable TopKAgg — O(k) exchange, no global sort. Determinism:
-    * integer tf/df/dl + fixed-order per-term score chain + round(6),
-    * the house device for float-exact cross-engine parity.
+  /** The title/body field split a single-column corpus allows:
+    * `f_title` = the first `titleLen` tokens, `f_body` = the rest (a
+    * real store would read two stored fields; the scoring pipeline is
+    * identical).
     */
-  def multiMatch(spark: SparkSession, dir: String,
-                 terms: Seq[String] = Seq("spark", "window", "merge"),
-                 titleLen: Int = 8, k: Int = 20): DataFrame = {
-    val fields = Seq(("title", 2.0), ("body", 1.0))
-    val perDoc = Tables.documents(spark, dir)
+  private def fieldSplit(spark: SparkSession, dir: String, titleLen: Int): DataFrame =
+    Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"),
         slice(col("ws"), 1, titleLen).as("f_title"),
         expr(s"slice(ws, $titleLen + 1, greatest(size(ws) - $titleLen, 0))").as("f_body"))
+
+  /** The split's fields with their multi-field boosts, in score order. */
+  private val fieldBoosts = Seq(("title", 2.0), ("body", 1.0))
+
+  /** Per-field BM25 inputs over [[fieldSplit]]: `dl_f` and `tf_f_t` per
+    * doc from array expressions in the scan projection, crossed with
+    * the one-row stats broadcast (`n_docs`, `avgdl_f`, `df_f_t`).
+    */
+  private def fieldScored(spark: SparkSession, dir: String, terms: Seq[String],
+                          titleLen: Int): DataFrame = {
+    val fields = fieldBoosts.map(_._1)
+    val perDoc = fieldSplit(spark, dir, titleLen)
       .select(col("doc_id") +:
-        fields.flatMap { case (f, _) =>
+        fields.flatMap { f =>
           size(col(s"f_$f")).cast("double").as(s"dl_$f") +:
             terms.map(t =>
               size(filter(col(s"f_$f"), w => w === t)).cast("double").as(s"tf_${f}_$t"))
         }: _*)
     val stats = perDoc.agg(
       count(lit(1)).cast("double").as("n_docs"),
-      fields.flatMap { case (f, _) =>
+      fields.flatMap { f =>
         (sum(col(s"dl_$f")) / count(lit(1))).as(s"avgdl_$f") +:
           terms.map(t =>
             sum(when(col(s"tf_${f}_$t") > 0, 1).otherwise(0)).cast("double").as(s"df_${f}_$t"))
       }: _*)
-    val scoreExpr = (for ((f, boost) <- fields; t <- terms) yield {
-      val tf = col(s"tf_${f}_$t"); val df = col(s"df_${f}_$t")
-      lit(boost) * log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-        (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col(s"dl_$f") / col(s"avgdl_$f"))))
-    }).reduce(_ + _)
-    val topk = graft.plans.TopKAgg.udafFor(k)
     perDoc.crossJoin(broadcast(stats))
-      .withColumn("score", round(scoreExpr, 6))
-      .filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+  }
+
+  /** C3n — multi_match, most_fields mode (the OpenSearch multi-field
+    * relevance query: one term list scored against several fields with
+    * per-field boosts, scores summed) over the [[fieldSplit]] title/body
+    * stand-in. Per field: its own dl/avgdl/df/tf — i.e. genuine
+    * per-field BM25, not a concatenated pseudo-field — then score =
+    * 2·bm25_title + 1·bm25_body. Determinism: integer tf/df/dl +
+    * fixed-order per-term score chain + round(6), the house device for
+    * float-exact cross-engine parity.
+    */
+  def multiMatch(spark: SparkSession, dir: String,
+                 terms: Seq[String] = Seq("spark", "window", "merge"),
+                 titleLen: Int = 8, k: Int = 20): DataFrame = {
+    val scoreExpr = (for ((f, boost) <- fieldBoosts; t <- terms) yield {
+      val (idf, tfNorm) = bm25Parts(t, f)
+      lit(boost) * idf * tfNorm
+    }).reduce(_ + _)
+    topHits(fieldScored(spark, dir, terms, titleLen).withColumn("score", round(scoreExpr, 6)), k)
       .orderBy(col("rank"))
   }
 
@@ -676,30 +695,19 @@ object TextAnalysis {
   /** C3u — boosting query (OpenSearch `boosting`: rank by the positive
     * query, DEMOTE — don't exclude — documents matching the negative
     * query by `negative_boost`; the "prefer fresh docs but don't hide
-    * stale ones" relevance tool). Rides C3b's single doc-keyed pass:
-    * the negative term joins the same conditional-count aggregate, the
-    * demotion is one `when` multiplier in the same projection — zero
-    * extra exchanges — and the mergeable TopKAgg ranks.
+    * stale ones" relevance tool). The negative term joins C3b's
+    * conditional-count aggregate and the demotion is one `when`
+    * multiplier in the same projection — zero extra exchanges.
     */
   def boostingSearch(spark: SparkSession, dir: String,
                      terms: Seq[String] = Seq("spark", "window", "merge"),
                      negTerm: String = "slow", negBoost: Double = 0.3,
                      k: Int = 20): DataFrame = {
-    val scored = bm25Scored(spark, dir, terms :+ negTerm)
-    val posScore = terms.map { t =>
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-        (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-    }.reduce(_ + _)
-    val demoted = round(posScore *
+    // the negative term rides the same aggregate; only the positive
+    // terms score
+    val demoted = round(bm25Sum(terms) *
       when(col(s"tf_$negTerm") > 0, negBoost).otherwise(1.0), 6)
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    scored.withColumn("bscore", demoted)
-      .filter(col("bscore") > 0)
-      .agg(topk(col("doc_id"), col("bscore")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    topHits(bm25Scored(spark, dir, terms :+ negTerm).withColumn("score", demoted), k)
       .orderBy(col("rank"))
   }
 
@@ -744,29 +752,18 @@ object TextAnalysis {
     * rows — one per (top-k doc, query term) — so a relevance engineer
     * can see which term carried each hit.
     *
-    * Rides C3b's single doc-keyed pass: the per-term contributions are
-    * more columns in the SAME projection (the stats row is already
-    * broadcast), top-k selection is the bounded TopKAgg, and the
-    * breakdown unpivots k×|terms| rows with `stack` — cost identical
-    * to the ranked search it explains, at any corpus size.
+    * The per-term contributions are more columns in C3b's projection
+    * and the breakdown unpivots k×|terms| rows with `stack` — cost
+    * identical to the ranked search it explains, at any corpus size.
     */
   def explainScore(spark: SparkSession, dir: String,
                    terms: Seq[String] = Seq("spark", "window", "merge"),
                    k: Int = 5): DataFrame = {
     val scored = bm25Scored(spark, dir, terms)
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    val top = scored.filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t._2").as("doc_id"))
-    val contrib = terms.map { t =>
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      (log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-        (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))),
-        tf, df)
-    }
-    val stackArgs = terms.zip(contrib).flatMap { case (t, (c, tf, df)) =>
-      Seq(lit(t), tf.cast("long"), df.cast("long"), round(c, 6))
+    val top = topHits(scored, k).select(col("doc_id"))
+    val stackArgs = terms.flatMap { t =>
+      Seq(lit(t), col(s"tf_$t").cast("long"), col(s"df_$t").cast("long"),
+        round(bm25Sum(Seq(t)), 6))
     }
     scored.join(broadcast(top), "doc_id")
       .select(col("doc_id"), col("score"),
@@ -821,52 +818,21 @@ object TextAnalysis {
     * SUMMED here, i.e. the `tie_breaker: 1.0` variant of cross_fields;
     * upstream's default (`tie_breaker: 0.0`) takes only the best field
     * per term group (dis_max) — swap the `.reduce(_ + _)` over fields
-    * for `greatest(...)` to get that point. Same single doc-keyed pass
-    * and one-row stats broadcast as C3n (the blend is one `greatest`
-    * in the projection); mergeable TopKAgg ranks.
+    * for `greatest(...)` to get that point. The blend is one
+    * `greatest` in C3n's projection.
     */
   def multiMatchCross(spark: SparkSession, dir: String,
                       terms: Seq[String] = Seq("spark", "window", "merge"),
                       titleLen: Int = 8, k: Int = 20): DataFrame = {
-    val fields = Seq(("title", 2.0), ("body", 1.0))
-    val perDoc = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
-        slice(col("ws"), 1, titleLen).as("f_title"),
-        expr(s"slice(ws, $titleLen + 1, greatest(size(ws) - $titleLen, 0))").as("f_body"))
-      .select(col("doc_id") +:
-        fields.flatMap { case (f, _) =>
-          size(col(s"f_$f")).cast("double").as(s"dl_$f") +:
-            terms.map(t =>
-              size(filter(col(s"f_$f"), w => w === t)).cast("double").as(s"tf_${f}_$t"))
-        }: _*)
-    val stats = perDoc.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      fields.flatMap { case (f, _) =>
-        (sum(col(s"dl_$f")) / count(lit(1))).as(s"avgdl_$f") +:
-          terms.map(t =>
-            sum(when(col(s"tf_${f}_$t") > 0, 1).otherwise(0)).cast("double").as(s"df_${f}_$t"))
-      }: _*)
     val scoreExpr = terms.map { t =>
       // blended statistics: ONE idf per term from the max df over the
       // field group — the defining cross_fields device
-      val dfB = greatest(fields.map { case (f, _) => col(s"df_${f}_$t") }: _*)
-      val idf = log(lit(1.0) + (col("n_docs") - dfB + 0.5) / (dfB + 0.5))
-      val tfSum = fields.map { case (f, boost) =>
-        val tf = col(s"tf_${f}_$t")
-        lit(boost) * (tf * 2.2 /
-          (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col(s"dl_$f") / col(s"avgdl_$f"))))
-      }.reduce(_ + _)
-      idf * tfSum
+      val dfB = greatest(fieldBoosts.map { case (f, _) => col(s"df_${f}_$t") }: _*)
+      val tfSum = fieldBoosts.map { case (f, boost) => lit(boost) * bm25Parts(t, f)._2 }
+        .reduce(_ + _)
+      bm25Idf(dfB) * tfSum
     }.reduce(_ + _)
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    perDoc.crossJoin(broadcast(stats))
-      .withColumn("score", round(scoreExpr, 6))
-      .filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    topHits(fieldScored(spark, dir, terms, titleLen).withColumn("score", round(scoreExpr, 6)), k)
       .orderBy(col("rank"))
   }
 
@@ -921,50 +887,17 @@ object TextAnalysis {
     * BEST one — a doc matching one field well beats a doc matching all
     * fields weakly — with `tie_breaker` folding the losing fields back
     * in at a discount: score = best + tie_breaker·(sum − best)). Same
-    * genuine per-field BM25 as C3n, same single-pass shape: per-field
-    * score columns are fixed-order expression chains in the one
-    * doc-keyed pass, the combiner is one greatest() more in the same
-    * projection — zero extra exchanges; mergeable TopKAgg ranks.
+    * genuine per-field BM25 as C3n; the combiner is one greatest() more
+    * in the same projection — zero extra exchanges.
     */
   def disMax(spark: SparkSession, dir: String,
              terms: Seq[String] = Seq("spark", "window", "merge"),
              titleLen: Int = 8, k: Int = 20, tieBreaker: Double = 0.3): DataFrame = {
-    val fields = Seq("title", "body")
-    val perDoc = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
-        slice(col("ws"), 1, titleLen).as("f_title"),
-        expr(s"slice(ws, $titleLen + 1, greatest(size(ws) - $titleLen, 0))").as("f_body"))
-      .select(col("doc_id") +:
-        fields.flatMap { f =>
-          size(col(s"f_$f")).cast("double").as(s"dl_$f") +:
-            terms.map(t =>
-              size(filter(col(s"f_$f"), w => w === t)).cast("double").as(s"tf_${f}_$t"))
-        }: _*)
-    val stats = perDoc.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      fields.flatMap { f =>
-        (sum(col(s"dl_$f")) / count(lit(1))).as(s"avgdl_$f") +:
-          terms.map(t =>
-            sum(when(col(s"tf_${f}_$t") > 0, 1).otherwise(0)).cast("double").as(s"df_${f}_$t"))
-      }: _*)
-    val fieldScore = fields.map { f =>
-      terms.map { t =>
-        val tf = col(s"tf_${f}_$t"); val df = col(s"df_${f}_$t")
-        log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-          (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col(s"dl_$f") / col(s"avgdl_$f"))))
-      }.reduce(_ + _)
-    }
+    val fieldScore = fieldBoosts.map { case (f, _) => bm25Sum(terms, f) }
     val best = greatest(fieldScore: _*)
     val total = fieldScore.reduce(_ + _)
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    perDoc.crossJoin(broadcast(stats))
-      .withColumn("score", round(best + lit(tieBreaker) * (total - best), 6))
-      .filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    topHits(fieldScored(spark, dir, terms, titleLen)
+      .withColumn("score", round(best + lit(tieBreaker) * (total - best), 6)), k)
       .orderBy(col("rank"))
   }
 
@@ -1028,41 +961,18 @@ object TextAnalysis {
     *   - gauss decay on n_chars around origin 300, scale 200 — the
     *     distance-decay family (recency decay uses the same shape on a
     *     date field).
-    * final = bm25 × fvf × decay, rounded like every ranked score. Same
-    * scale shape as C3b: one doc-keyed aggregate, one-row stats
-    * broadcast, mergeable TopKAgg — the modifiers are scalar
-    * expressions riding the same pass, costing nothing extra.
+    * final = bm25 × fvf × decay, rounded like every ranked score. The
+    * modifiers are scalar expressions over n_chars, carried through
+    * C3b's doc-keyed aggregate — they cost nothing extra.
     */
   def functionScore(spark: SparkSession, dir: String,
                     terms: Seq[String] = Seq("spark", "window", "merge"),
                     k: Int = 20): DataFrame = {
-    val perDoc = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), explode(split(col("text"), " ")).as("token"))
-      .groupBy(col("doc_id"), col("n_chars"))
-      .agg(count(lit(1)).cast("double").as("dl"),
-        terms.map(t =>
-          sum(when(col("token") === t, 1).otherwise(0)).cast("double").as(s"tf_$t")): _*)
-    val stats = perDoc.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      (sum(col("dl")) / count(lit(1))).as("avgdl") +:
-        terms.map(t =>
-          sum(when(col(s"tf_$t") > 0, 1).otherwise(0)).cast("double").as(s"df_$t")): _*)
-    val bm25 = terms.map { t =>
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-        (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-    }.reduce(_ + _)
     val fvf = log(lit(1.0) + col("n_chars").cast("double") / 100.0)
     val decay = exp(-(col("n_chars").cast("double") - 300.0) *
       (col("n_chars").cast("double") - 300.0) / (2.0 * 200.0 * 200.0))
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    perDoc.crossJoin(broadcast(stats))
-      .withColumn("score", round(bm25 * fvf * decay, 6))
-      .filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    topHits(bm25Scored(spark, dir, terms, carry = Seq("n_chars"))
+      .withColumn("score", round(bm25Sum(terms) * fvf * decay, 6)), k)
       .orderBy(col("rank"))
   }
 
@@ -1635,7 +1545,7 @@ object TextAnalysis {
     * tokens over-represented in a foreground slice (source = src0) vs
     * the whole corpus, scored by relative frequency ratio. Background
     * totals are broadcast; one shuffle on token. The top-k over the
-    * vocabulary-sized per-token aggregate is the string-keyed TopKAgg
+    * vocabulary-sized per-token aggregate is TopKAgg on a String key
     * (bounded buffer, map-side partials) rather than a global rank
     * window — at web scale the vocabulary is 10⁸⁺ rows, so a single-
     * partition sort is exactly the plan that must not exist. The k
@@ -1656,16 +1566,12 @@ object TextAnalysis {
       count(lit(1)).cast("double").as("bg"))
     val totals = perToken.agg(
       sum(col("fg")).as("fg_total"), sum(col("bg")).as("bg_total"))
-    val topk = graft.plans.TopKAgg.udafStrFor(k)
-    val ranked = perToken
+    val scored = perToken
       .filter(col("fg") >= 3)
       .crossJoin(broadcast(totals))
       .withColumn("score",
         round((col("fg") / col("fg_total")) / (col("bg") / col("bg_total")), 6))
-      .agg(topk(col("token"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("token"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    val ranked = TopKAgg.rank(scored, k, "token", col("score"))
     perToken.join(broadcast(ranked), "token")
       .select(col("token"), col("fg").cast("long").as("fg"),
         col("bg").cast("long").as("bg"), col("score"), col("rank"))
@@ -1680,7 +1586,7 @@ object TextAnalysis {
     * its own vocabulary significant. Scoring is JLH
     * ((fg% − bg%)·(fg%/bg%)), OpenSearch's default. Plan shape mirrors
     * C24: ONE token-keyed aggregate (map-side combined), a one-row
-    * totals broadcast, and the mergeable TopK — no global token sort.
+    * totals broadcast, and the mergeable TopKAgg — no global token sort.
     */
   def significantText(spark: SparkSession, dir: String,
                       term: String = "spark", k: Int = 15): DataFrame = {
@@ -1696,17 +1602,13 @@ object TextAnalysis {
     val totals = base.agg(
       sum(when(col("is_fg"), 1).otherwise(0)).cast("double").as("n_fg"),
       count(lit(1)).cast("double").as("n_docs"))
-    val topk = graft.plans.TopKAgg.udafStrFor(k)
-    val ranked = perToken
+    val scored = perToken
       .filter(col("fg") >= 3)
       .crossJoin(broadcast(totals))
       .withColumn("score",
         round(((col("fg") / col("n_fg")) - (col("bg") / col("n_docs"))) *
           ((col("fg") / col("n_fg")) / (col("bg") / col("n_docs"))), 6))
-      .agg(topk(col("token"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("token"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    val ranked = TopKAgg.rank(scored, k, "token", col("score"))
     perToken.join(broadcast(ranked), "token")
       .select(col("token"), col("fg").cast("long").as("fg"),
         col("bg").cast("long").as("bg"), col("score"), col("rank"))
@@ -1812,10 +1714,10 @@ object TextAnalysis {
     * the organic query does NOT match it (score 0), and a pinned doc
     * never re-appears in the organic tail (OpenSearch dedups).
     *
-    * Shape for scale: organic ranking is C3b's single doc-keyed pass +
-    * mergeable TopKAgg; the pinned side is an |ids|-row broadcast
-    * lookup into the SAME scored frame; the final rank is one window
-    * over ≤ k + |ids| rows. Nothing new is corpus-sized.
+    * Shape for scale: organic ranking is C3b's; the pinned side is an
+    * |ids|-row broadcast lookup into the SAME scored frame; the final
+    * rank is one window over ≤ k + |ids| rows. Nothing new is
+    * corpus-sized.
     */
   def pinnedSearch(spark: SparkSession, dir: String,
                    ids: Seq[Long] = Seq(42L, 7L, 99L),
@@ -1830,12 +1732,8 @@ object TextAnalysis {
     // docs surface regardless of the organic match)
     val pinned = scored.join(broadcast(pins), "doc_id")
       .select(col("doc_id"), col("score"), lit(true).as("pinned"), col("pin_order"))
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    val organic = scored
-      .filter(col("score") > 0 && !col("doc_id").isin(ids: _*))
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t._2").as("doc_id"), col("t._1").as("score"),
+    val organic = topHits(scored.filter(!col("doc_id").isin(ids: _*)), k)
+      .select(col("doc_id"), col("score"),
         lit(false).as("pinned"), lit(Int.MaxValue).as("pin_order"))
     val w = Window.orderBy(col("pin_order"), col("score").desc, col("doc_id"))
     pinned.unionByName(organic)
@@ -1896,28 +1794,17 @@ object TextAnalysis {
     * ONE document frequency (doc matches if ANY field contains the
     * term) and therefore one idf — so, unlike cross_fields, a term's
     * weight never depends on WHICH field it landed in, only how often.
-    *
-    * Same scale shape as C3n/C3t: one doc-keyed pass computes the
-    * per-field tf/dl battery, the synthetic-field stats collapse to a
-    * one-row broadcast, and the mergeable TopKAgg ranks — no new
-    * exchange over the corpus.
     */
   def combinedFields(spark: SparkSession, dir: String,
                      terms: Seq[String] = Seq("spark", "window", "merge"),
                      titleLen: Int = 8, k: Int = 20): DataFrame = {
-    val fields = Seq(("title", 2.0), ("body", 1.0))
-    val perField = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
-        slice(col("ws"), 1, titleLen).as("f_title"),
-        expr(s"slice(ws, $titleLen + 1, greatest(size(ws) - $titleLen, 0))").as("f_body"))
     // the synthetic combined field: weighted tf and dl, computed in the
     // same projection — the per-field columns never leave the scan
-    val perDoc = perField.select(col("doc_id") +:
-      (fields.map { case (f, w) => lit(w) * size(col(s"f_$f")).cast("double") }
+    val perDoc = fieldSplit(spark, dir, titleLen).select(col("doc_id") +:
+      (fieldBoosts.map { case (f, w) => lit(w) * size(col(s"f_$f")).cast("double") }
         .reduce(_ + _).as("dl_c") +:
         terms.map(t =>
-          fields.map { case (f, w) =>
+          fieldBoosts.map { case (f, w) =>
             lit(w) * size(filter(col(s"f_$f"), x => x === t)).cast("double")
           }.reduce(_ + _).as(s"tf_c_$t"))): _*)
     val stats = perDoc.agg(
@@ -1925,19 +1812,10 @@ object TextAnalysis {
       (sum(col("dl_c")) / count(lit(1))).as("avgdl_c") +:
         terms.map(t =>
           sum(when(col(s"tf_c_$t") > 0, 1).otherwise(0)).cast("double").as(s"df_$t")): _*)
-    val scoreExpr = terms.map { t =>
-      val tf = col(s"tf_c_$t"); val df = col(s"df_$t")
-      log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-        (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl_c") / col("avgdl_c"))))
-    }.reduce(_ + _)
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    perDoc.crossJoin(broadcast(stats))
-      .withColumn("score", round(scoreExpr, 6))
-      .filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+    val scoreExpr = terms.map(t =>
+      bm25Idf(col(s"df_$t")) * bm25TfNorm(col(s"tf_c_$t"), col("dl_c"), col("avgdl_c")))
+      .reduce(_ + _)
+    topHits(perDoc.crossJoin(broadcast(stats)).withColumn("score", round(scoreExpr, 6)), k)
       .orderBy(col("rank"))
   }
 
@@ -1991,41 +1869,17 @@ object TextAnalysis {
     * query under the default constant_score rewrite: any doc with a
     * token starting with the prefix gets a flat 1.0 contribution —
     * prefix expansions deliberately carry no per-term idf (scoring
-    * thousands of expansions would be both slow and meaningless).
-    *
-    * One doc-keyed pass: tf for the complete terms and a `startswith`
-    * existence flag for the prefix come out of the same token
-    * aggregate; stats broadcast; TopKAgg ranks.
+    * thousands of expansions would be both slow and meaningless). The
+    * prefix's `startswith` existence flag comes out of C3b's token
+    * aggregate beside the complete terms' tf.
     */
   def matchBoolPrefix(spark: SparkSession, dir: String,
                       terms: Seq[String] = Seq("spark", "merge"),
                       prefix: String = "win", k: Int = 20): DataFrame = {
-    val perDoc = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("double").as("dl"),
-        (terms.map(t =>
-          sum(when(col("token") === t, 1).otherwise(0)).cast("double").as(s"tf_$t")) :+
-          max(when(col("token").startsWith(prefix), 1).otherwise(0)).as("has_prefix")): _*)
-    val stats = perDoc.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      (sum(col("dl")) / count(lit(1))).as("avgdl") +:
-        terms.map(t =>
-          sum(when(col(s"tf_$t") > 0, 1).otherwise(0)).cast("double").as(s"df_$t")): _*)
-    val termScore = terms.map { t =>
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
-        (tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-    }.reduce(_ + _)
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    perDoc.crossJoin(broadcast(stats))
+    topHits(bm25Scored(spark, dir, terms,
+      extra = Seq(max(when(col("token").startsWith(prefix), 1).otherwise(0)).as("has_prefix")))
       .withColumn("score",
-        round(termScore + when(col("has_prefix") === 1, 1.0).otherwise(0.0), 6))
-      .filter(col("score") > 0)
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"), col("col._1").as("score"),
-        (col("pos") + 1).cast("long").as("rank"))
+        round(bm25Sum(terms) + when(col("has_prefix") === 1, 1.0).otherwise(0.0), 6)), k)
       .orderBy(col("rank"))
   }
 
@@ -2103,25 +1957,19 @@ object TextAnalysis {
       .orderBy(col("w_u").desc, col("token"))
     val postings = tf.join(df, "token").crossJoin(broadcast(nDocs))
       .withColumn("w_u",
-        round(log(lit(1.0) + col("tf")) *
-          log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) * 1e6)
-          .cast("long"))
+        round(log(lit(1.0) + col("tf")) * bm25Idf(col("df")) * 1e6).cast("long"))
       .filter(col("w_u") > 0)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= docTerms)
       .select(col("doc_id"), col("token"), col("w_u"))
     val qExp = expansion.toDF("token", "q_w")
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    postings
+    val scored = postings
       .filter(col("token").isin(expansion.map(_._1): _*))
       .join(broadcast(qExp), "token")
       .groupBy(col("doc_id"))
       .agg(sum(col("w_u") * col("q_w")).as("score_u"))
-      .agg(topk(col("doc_id"), col("score_u").cast("double")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"),
-        col("col._1").cast("long").as("score_u"),
-        (col("pos") + 1).cast("long").as("rank"))
+    TopKAgg.rank(scored, k, "doc_id", col("score_u").cast("double"))
+      .select(col("doc_id"), col("score").cast("long").as("score_u"), col("rank"))
       .orderBy(col("rank"))
   }
 
@@ -2175,16 +2023,12 @@ object TextAnalysis {
   def rankFeature(spark: SparkSession, dir: String,
                   term: String = "spark", pivot: Long = 350L,
                   k: Int = 20): DataFrame = {
-    val topk = graft.plans.TopKAgg.udafFor(k)
-    Tables.documents(spark, dir)
+    val scored = Tables.documents(spark, dir)
       .filter(col("text").contains(term))
       .select(col("doc_id"),
         expr(s"(2000000L * n_chars) div (n_chars + ${pivot}L)").as("score_u"))
-      .agg(topk(col("doc_id"), col("score_u").cast("double")).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("col._2").as("doc_id"),
-        col("col._1").cast("long").as("score_u"),
-        (col("pos") + 1).cast("long").as("rank"))
+    TopKAgg.rank(scored, k, "doc_id", col("score_u").cast("double"))
+      .select(col("doc_id"), col("score").cast("long").as("score_u"), col("rank"))
       .orderBy(col("rank"))
   }
 

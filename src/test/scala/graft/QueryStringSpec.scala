@@ -49,6 +49,20 @@ class QueryStringSpec extends AnyFunSuite {
     assert(ids("note:50\\%*") == Set())     // backslash is literal in a term
   }
 
+  test("wildcard backslash-escapes: \\* and \\? are literals, \\\\ a literal backslash") {
+    val esc = Seq((10L, "a*b"), (11L, "axxb"), (12L, "a?b"), (13L, "a\\b"), (14L, "ab"))
+      .toDF("id", "note")
+    def eids(q: String): Set[Long] =
+      esc.filter(QueryString.compile(esc, q, Nil)).select("id").as[Long].collect().toSet
+    // escaped * = literal asterisk, not any-run: 11 and 13 must NOT match
+    assert(eids("note:a\\*b") == Set(10L))
+    assert(eids("note:*\\**") == Set(10L))
+    // escaped ? = literal question mark, not one char
+    assert(eids("note:a\\?b") == Set(12L))
+    // \\ = literal backslash; the unescaped * still wildcards after it
+    assert(eids("note:a\\\\*") == Set(13L))
+  }
+
   test("quoted values carry spaces and colons, compared exactly") {
     assert(ids("note:\"path: /checkout failed\"") == Set(3L))
     assert(ids("note:\"big\"") == Set()) // exact, not substring
